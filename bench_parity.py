@@ -4,8 +4,9 @@ Every query family has measured 10x/100x/1000x row-count vectors, but
 the reference's actual workload scales on a different axis: the NUMBER
 of studies (cmd/cli/main.go walks a directory of study dirs). This
 harness generates a synthetic study tree with N small studies (the
-axis is count, not per-study bytes) and times every CLI mode plus the
-single-job partitioned variant end-to-end:
+axis is count, not per-study bytes) and times the two convert paths
+(convert_cna_grouped with derived, convert_mutations_grouped_salvage)
+and both combines end-to-end:
 
     python bench_parity.py                 # N=100
     python bench_parity.py 1000            # N=1000
@@ -14,8 +15,9 @@ single-job partitioned variant end-to-end:
 Prints one JSON line per tier and merges all tiers into
 BENCH_parity.json. Study shape: 20 genes x 8 samples CNA + 12-row MAF
 per study — small enough that all measured cost is per-study overhead
-(driver loop, job scheduling, plan analysis), the thing this tier
-exists to expose.
+(driver work, job scheduling, plan analysis), the thing this tier
+exists to expose. Each tier's entry in BENCH_parity.json is replaced
+whole, so it carries only the paths that exist.
 """
 
 from __future__ import annotations
@@ -110,70 +112,20 @@ def run_tier(spark, n_studies: int) -> dict:
 
     out_cna = os.path.join(work, "out_cna")
     out_mut = os.path.join(work, "out_mut")
-    out_part = os.path.join(work, "out_part")
-    # sequential loop = the reference's own shape; measured only at
-    # the small tier (4.0s/study: at N=1000 that is ~67 min of pure
-    # driver-loop overhead — the number the mw8 column exists to fix)
-    if n_studies <= 100:
-        s = timed(
-            "convert_cna_with_derived_seq",
-            pipelines.convert_cna, spark, studies,
-            os.path.join(work, "out_cna_seq"), True,
-        )
-        assert len(s.processed) == n_studies, s.failed
-        s = timed(
-            "convert_mutations_seq",
-            pipelines.convert_mutations, spark, studies,
-            os.path.join(work, "out_mut_seq"),
-        )
-        assert len(s.processed) == n_studies, s.failed
-    s = timed(
-        "convert_cna_with_derived_mw8",
-        pipelines.convert_cna, spark, studies, out_cna, True,
-        max_workers=8,
+    n = timed(
+        "convert_cna_grouped_with_derived",
+        pipelines.convert_cna_grouped, spark, studies, out_cna, True,
     )
-    assert len(s.processed) == n_studies, s.failed
+    assert n == n_studies
+    # the happy-path price of D4 isolation is the probe's per-file
+    # count scans on top of the grouped job
     s = timed(
-        "convert_mutations_mw8",
-        pipelines.convert_mutations, spark, studies, out_mut,
-        max_workers=8,
+        "convert_mutations_grouped_salvage",
+        pipelines.convert_mutations_grouped_salvage, spark, studies, out_mut,
     )
     assert len(s.processed) == n_studies, s.failed
     timed("combine_cna_with_derived", pipelines.combine_cna, spark, out_cna, True)
     timed("combine_mutations", pipelines.combine_mutations, spark, out_mut)
-    n = timed(
-        "convert_cna_partitioned_with_derived",
-        pipelines.convert_cna_partitioned, spark, studies, out_part, True,
-    )
-    assert n == n_studies
-    n = timed(
-        "convert_mutations_partitioned",
-        pipelines.convert_mutations_partitioned, spark, studies,
-        os.path.join(work, "out_mpart"),
-    )
-    assert n == n_studies
-    # the single-job modes that KEEP the reference's per-study-file
-    # layout (round-9 verdict #2): partitionBy + driver rename
-    n = timed(
-        "convert_mutations_grouped",
-        pipelines.convert_mutations_grouped, spark, studies,
-        os.path.join(work, "out_mgrp"),
-    )
-    assert n == n_studies
-    # grouped + D4 isolation: the happy-path price is the probe's
-    # per-file count scans on top of the grouped job
-    s = timed(
-        "convert_mutations_grouped_salvage",
-        pipelines.convert_mutations_grouped_salvage, spark, studies,
-        os.path.join(work, "out_msal"),
-    )
-    assert len(s.processed) == n_studies, s.failed
-    n = timed(
-        "convert_cna_grouped_with_derived",
-        pipelines.convert_cna_grouped, spark, studies,
-        os.path.join(work, "out_cgrp"), True,
-    )
-    assert n == n_studies
     shutil.rmtree(work, ignore_errors=True)
     per_study = {
         k: round(v / n_studies, 4) for k, v in timings.items()

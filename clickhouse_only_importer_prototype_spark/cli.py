@@ -1,4 +1,6 @@
-"""CLI mirroring the reference's six modes (cmd/cli/main.go:46-105).
+"""CLI mirroring the reference's six modes (cmd/cli/main.go:46-105),
+plus four modes beyond the reference (ddl, load-clickhouse, checksum,
+query).
 
 Usage:
     python -m clickhouse_only_importer_prototype_spark.cli \
@@ -16,28 +18,18 @@ from clickhouse_only_importer_prototype_spark.plans import pipelines
 from clickhouse_only_importer_prototype_spark.session import get_spark
 
 MODES = (
+    # the reference's per-study layout from one grouped Spark plan per
+    # table kind (pipelines.convert_cna_grouped); a nonzero exit on the
+    # first bad file (cna/transformer.go:30-45)
     "convert-cna",
     "convert-cna-with-derived",
+    # probe -> grouped write of the healthy files -> per-file replay of
+    # the failure manifest (pipelines.convert_mutations_grouped_salvage);
+    # a nonzero exit if any file stays in the manifest
     "convert-mutations",
     "combine-cna",
     "combine-cna-with-derived",
     "combine-mutations",
-    # beyond the reference: single-job partitioned output for
-    # many-study corpora (see pipelines.convert_cna_partitioned /
-    # convert_mutations_partitioned)
-    "convert-cna-partitioned",
-    "convert-cna-partitioned-with-derived",
-    "convert-mutations-partitioned",
-    # beyond the reference: single-job conversion that still writes the
-    # reference's per-study-file layout (partitionBy + driver rename;
-    # see pipelines.convert_mutations_grouped / convert_cna_grouped)
-    "convert-mutations-grouped",
-    # grouped write + the loop mode's per-file failure isolation
-    # (probe -> grouped over healthy files -> loop replay of the
-    # failure manifest; pipelines.convert_mutations_grouped_salvage)
-    "convert-mutations-grouped-salvage",
-    "convert-cna-grouped",
-    "convert-cna-grouped-with-derived",
     # beyond the reference: emit the ClickHouse CREATE TABLE statements
     # for the five catalog tables (the DDL the JDBC sink's inserts or an
     # out-of-band parquet load assume on the server)
@@ -86,13 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         "-describe", "--describe", action="store_true",
         help="query mode with -name list: include each query's"
         " one-line description",
-    )
-    parser.add_argument(
-        "-parallelism", "--parallelism", type=int, default=1,
-        help="convert modes: studies processed concurrently (driver"
-        " threads submitting independent Spark jobs; 1 = the"
-        " reference's sequential loop). Outputs are identical; see"
-        " plans/pipelines.py for the failure-semantics note",
     )
     parser.add_argument(
         "-oracle", "--oracle", action="store_true",
@@ -252,53 +237,24 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"cips-{args.mode}")
     rc = 0
     try:
-        if args.mode in ("convert-cna", "convert-cna-with-derived"):
-            # CNA mode aborts on first failure (cna/transformer.go:30-45):
-            # report it as a nonzero exit, not a traceback
+        if args.mode.startswith("convert"):
+            # an aborted run is a nonzero exit, not a traceback
             try:
-                pipelines.convert_cna(
-                    spark,
-                    args.tsv_dir,
-                    args.parquet_dir,
-                    with_derived=args.mode.endswith("with-derived"),
-                    max_workers=args.parallelism,
-                )
+                if args.mode == "convert-mutations":
+                    summary = pipelines.convert_mutations_grouped_salvage(
+                        spark, args.tsv_dir, args.parquet_dir
+                    )
+                    rc = 0 if summary.ok else 1
+                else:
+                    pipelines.convert_cna_grouped(
+                        spark,
+                        args.tsv_dir,
+                        args.parquet_dir,
+                        with_derived=args.mode.endswith("with-derived"),
+                    )
             except Exception as exc:  # noqa: BLE001
-                logging.error("convert-cna aborted: %s", exc)
+                logging.error("%s aborted: %s", args.mode, exc)
                 rc = 1
-        elif args.mode.startswith("convert-cna-partitioned"):
-            pipelines.convert_cna_partitioned(
-                spark,
-                args.tsv_dir,
-                args.parquet_dir,
-                with_derived=args.mode.endswith("with-derived"),
-            )
-        elif args.mode == "convert-mutations-partitioned":
-            pipelines.convert_mutations_partitioned(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-        elif args.mode == "convert-mutations-grouped":
-            pipelines.convert_mutations_grouped(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-        elif args.mode == "convert-mutations-grouped-salvage":
-            summary = pipelines.convert_mutations_grouped_salvage(
-                spark, args.tsv_dir, args.parquet_dir
-            )
-            rc = 0 if summary.ok else 1
-        elif args.mode.startswith("convert-cna-grouped"):
-            pipelines.convert_cna_grouped(
-                spark,
-                args.tsv_dir,
-                args.parquet_dir,
-                with_derived=args.mode.endswith("with-derived"),
-            )
-        elif args.mode == "convert-mutations":
-            summary = pipelines.convert_mutations(
-                spark, args.tsv_dir, args.parquet_dir,
-                max_workers=args.parallelism,
-            )
-            rc = 0 if summary.ok else 1
         elif args.mode in ("combine-cna", "combine-cna-with-derived"):
             pipelines.combine_cna(
                 spark,

@@ -4,19 +4,30 @@ Modes (cmd/cli/main.go:46-105): convert-cna, convert-cna-with-derived,
 convert-mutations, combine-cna, combine-cna-with-derived,
 combine-mutations.
 
+One execution path per table kind: convert_cna_grouped and
+convert_mutations_grouped_salvage each run the whole corpus as one
+grouped Spark plan (one scan, one shuffle and one write per table,
+whatever the study count) and write the reference's per-study layout,
+``<studyDir>_<stem>_<table>.parquet`` with one part file each.
+
 Dataflow parity (SURVEY §2.10):
   * D1/D2 one-pass multi-sink fan-out: the reference pipes one TSV scan
-    into 2-3 concurrent parquet writers over Go channels. Spark
-    restatement: one cached DataFrame, 2-3 write actions — the cache
-    replaces the reference's re-use of the in-flight stream. The wide
-    CNA plans are shuffle-free, so even uncached the cost is a rescan,
-    not a recompute of anything expensive.
+    into 2-3 concurrent parquet writers over Go channels. Here one
+    multi-path text scan of every CNA matrix feeds every table through
+    positional parsing and a broadcast header manifest. A file the raw
+    tab split cannot parse (a csv quote char) converts alone through
+    the per-file csv reader — a fallback for that file, not a mode.
   * D3 event-id threading across files: subsumed by the prefix-sum id
     assigner over all files at once (operators/mutation.py) — the
     sequential file loop disappears.
-  * D4 per-file error isolation: try/except per file with a failure
-    manifest (mutations tolerate failures, CNA aborts — matching
-    cna/transformer.go:30-45 vs mutation/transformer.go:37-73).
+  * D4 per-file error isolation: mutations probe every file first; a
+    file failing its read goes to the failure manifest and consumes no
+    ids, the healthy files convert in one grouped job, and the failed
+    ones are replayed one by one. CNA aborts on the first bad file
+    (cna/transformer.go:30-45 vs mutation/transformer.go:37-73).
+    Outputs are staged under ``<parquet_dir>/.grouped_staging*`` and
+    renamed into place only after every table is written, so a failed
+    run never leaves one table of a study without its siblings.
   * U1 combine: multi-path parquet read (union-all, duplicates kept)
     with one streaming write — the reference materializes each whole
     table in memory (cna/reader_parquet.go:60-64); Spark never does.
@@ -29,6 +40,7 @@ import glob as _glob
 import logging
 import os
 import shutil
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,877 +108,109 @@ class RunSummary:
         return not self.failed
 
 
-def _pipeline_pool(max_workers: int):
-    """Thread pool for cross-study concurrency. Spark job submission
-    is thread-safe and the scheduler interleaves concurrent jobs
-    across executor slots; the per-study loop's cost is DRIVER-side
-    blocking on each write action (measured 4.0s/study sequential for
-    CNA-with-derived at the 20-study tier — 2 header reads + 3 write
-    jobs of per-job overhead, not data). Threads overlap those waits;
-    the GIL is irrelevant because the time is spent inside blocking
-    JVM calls."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    return ThreadPoolExecutor(max_workers=max_workers)
+def _base(item) -> str:
+    """The reference's per-file output stem ``<studyDir>_<stem>``."""
+    return os.path.basename(output_base(item.path, ""))
 
 
-def convert_cna(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    with_derived: bool = False,
-    single_file: bool = True,
-    max_workers: int = 1,
-) -> RunSummary:
-    """convert-cna[-with-derived] (cmd/cli/main.go:111-151).
-
-    Per study file: one scan -> genetic_alterations +
-    genetic_profile_samples (+ derived). CNA mode aborts on first
-    failure like the reference (cna/transformer.go:30-45).
-
-    ``max_workers`` > 1 runs studies concurrently (outputs are
-    independent per study, so results are identical to sequential;
-    pinned by tests). Abort-on-first-failure still holds: the first
-    study error cancels all not-yet-started studies and re-raises —
-    in-flight studies finish their current write, matching the
-    reference's already-written-files-stay posture.
-    """
-    inputs = discover_cna_files(tsv_dir)
-    logger.info("found %d CNA files", len(inputs))
-    summary = RunSummary()
-    os.makedirs(parquet_dir, exist_ok=True)
-
-    def one(item) -> str:
-        base = output_base(item.path, parquet_dir)
-        df = read_cna_matrix(spark, item.path)
-        ga = cna_ops.genetic_alterations(
-            df, item.cancer_study_id, item.genetic_profile_id
-        )
-        gps = cna_ops.genetic_profile_samples(
-            spark, df, item.cancer_study_id, item.genetic_profile_id
-        )
-        write_parquet(
-            ga, f"{base}_genetic_alterations.parquet", single_file=single_file
-        )
-        write_parquet(
-            gps, f"{base}_genetic_profile_samples.parquet", single_file=single_file
-        )
-        if with_derived:
-            derived = cna_ops.cna_derived(
-                df, item.cancer_study_id, item.genetic_profile_id
-            )
-            write_parquet(
-                derived, f"{base}_derived.parquet", single_file=single_file
-            )
-        return item.path
-
-    if max_workers <= 1:
-        for item in inputs:
-            summary.processed.append(one(item))
-        return summary
-    from concurrent.futures import as_completed
-
-    with _pipeline_pool(max_workers) as pool:
-        futures = {pool.submit(one, item): item for item in inputs}
-        try:
-            for fut in as_completed(futures):
-                summary.processed.append(fut.result())
-        finally:
-            for fut in futures:
-                fut.cancel()
-    # deterministic report order regardless of completion order
-    summary.processed.sort()
-    return summary
-
-
-def _write_mutation_outputs(
-    spark: SparkSession,
-    item,
-    parquet_dir: str,
-    start: int,
-    single_file: bool = True,
-) -> int:
-    """The per-file mutation write shared by the sequential loop, the
-    parallel phase-B, and the salvage replay (one implementation so
-    id/cleanup/layout semantics cannot drift): read the MAF, assign
-    ids from ``start``, write both per-study outputs (ONE part file
-    each when ``single_file``). Returns the next free id (an empty
-    MAF keeps the counter unchanged — must not reset). On failure,
-    partial outputs are removed (a stale mutation_event parquet would
-    enter the combine glob with an id range another file may
-    legitimately hold) and the error re-raised; the cached frame is
-    unpersisted on EVERY path so a failed file never pins executor
-    storage for the session."""
-    base = output_base(item.path, parquet_dir)
-    out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
-    try:
-        df = read_maf(spark, item.path)
-        with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
-        try:
-            write_parquet(
-                mut_ops.mutation_event(with_ids),
-                out_paths[0],
-                single_file=single_file,
-            )
-            write_parquet(
-                mut_ops.mutation(
-                    with_ids, item.cancer_study_id, item.genetic_profile_id
-                ),
-                out_paths[1],
-                single_file=single_file,
-            )
-            return mut_ops.next_event_id(with_ids, start=start)
-        finally:
-            with_ids.unpersist()
-    except Exception:
-        for p in out_paths:
-            shutil.rmtree(p, ignore_errors=True)
-        raise
-
-
-def _probe_maf_counts(
-    spark: SparkSession,
-    inputs: list,
-    max_workers: int,
-    failed: dict[str, str],
-) -> dict[str, int]:
-    """Phase-A probe shared by convert_mutations(max_workers>1) and
-    the salvage mode: one column-pruned count scan per file via driver
-    threads. A file failing its read lands in ``failed`` and consumes
-    no ids — exactly the sequential loop's read-failure semantics."""
-    from concurrent.futures import as_completed
-
-    counts: dict[str, int] = {}
-    with _pipeline_pool(max_workers) as pool:
-
-        def count_one(item) -> tuple[str, int]:
-            return item.path, read_maf(spark, item.path).count()
-
-        futures = {pool.submit(count_one, it): it for it in inputs}
-        for fut in as_completed(futures):
-            item = futures[fut]
-            try:
-                path, n = fut.result()
-                counts[path] = n
-            except Exception as exc:  # noqa: BLE001 — D4 isolation
-                logger.error("failed to read %s: %s", item.path, exc)
-                failed[item.path] = str(exc)
-    return counts
-
-
-def convert_mutations(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    start_event_id: int = 0,
-    single_file: bool = True,
-    max_workers: int = 1,
-) -> RunSummary:
-    """convert-mutations (cmd/cli/main.go:396-424).
-
-    Event ids are dense and gapless across all files in sorted-path
-    order (prefix-sum assigner) — the reference's sequential id
-    threading without the sequential execution. Per-file failures are
-    tolerated and reported (mutation/transformer.go:37-73).
-
-    ``max_workers`` > 1 switches to a two-phase prefix-sum: phase A
-    counts every file's rows concurrently (one column-pruned scan
-    each), the driver prefix-sums the counts in sorted-path order into
-    per-file start ids (id assignment identical to sequential — pinned
-    by tests), then phase B assigns ids and writes both outputs
-    concurrently. Failure semantics per phase: a file failing its READ
-    (phase A) consumes no ids, exactly like sequential; a file failing
-    its WRITE (phase B) has already reserved its id range, so later
-    files keep their (still unique, still sorted) ids and the range is
-    left unused — sequential mode would reuse it. Ids remain UNIQUE
-    and ordered in both modes; only gaplessness-after-mid-run-write-
-    failure differs, and the failure manifest records exactly which
-    files to replay.
-    """
-    inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files", len(inputs))
-    summary = RunSummary()
-    os.makedirs(parquet_dir, exist_ok=True)
-
-    def write_one(item, start: int) -> int | None:
-        """Assign ids from ``start``, write both outputs; returns the
-        next free id on success (None on failure — the caller decides
-        whether the range was reserved)."""
-        try:
-            nxt = _write_mutation_outputs(
-                spark, item, parquet_dir, start, single_file=single_file
-            )
-            summary.processed.append(item.path)
-            return nxt
-        except Exception as exc:  # noqa: BLE001 — D4 per-file isolation
-            logger.error("failed to process %s: %s", item.path, exc)
-            summary.failed[item.path] = str(exc)
-            return None
-
-    if max_workers <= 1:
-        next_id = start_event_id
-        for item in inputs:
-            nxt = write_one(item, next_id)
-            if nxt is not None:  # a failed file consumes no ids
-                next_id = nxt
-    else:
-        from concurrent.futures import as_completed
-
-        # phase A: concurrent row counts (column-pruned scans);
-        # read errors recorded here consume no ids
-        counts = _probe_maf_counts(spark, inputs, max_workers, summary.failed)
-        # driver prefix-sum in sorted-path order (inputs are sorted by
-        # discovery) -> identical id assignment to the sequential loop
-        starts: dict[str, int] = {}
-        nid = start_event_id
-        for item in inputs:
-            if item.path in counts:
-                starts[item.path] = nid
-                nid += counts[item.path]
-        # phase B: concurrent assign + write with reserved id ranges
-        with _pipeline_pool(max_workers) as pool:
-            wfuts = [
-                pool.submit(write_one, it, starts[it.path])
-                for it in inputs
-                if it.path in starts
-            ]
-            for fut in as_completed(wfuts):
-                fut.result()  # write_one handles its own isolation
-        summary.processed.sort()
-
-    if summary.failed:
-        logger.error(
-            "%d/%d mutation files failed: %s",
-            len(summary.failed),
-            len(inputs),
-            sorted(summary.failed),
-        )
-    return summary
-
-
-def _cna_single_job_scan(
-    spark: SparkSession, tsv_dir: str
-) -> tuple[list, list[tuple], DataFrame | None]:
-    """Shared scaffold of the single-job CNA modes: discovery, driver-
-    side header parse (manifest + per-study sample lists), ONE
-    multi-path ``spark.read.text`` scan, broadcast attribution join,
-    the header/quote guard aggregation, and positional cell parsing.
-    Returns ``(inputs, gps_rows, data)`` where ``gps_rows`` is aligned
-    with ``inputs`` (one (study, profile, ordered_sample_list) per
-    file) and ``data`` carries one row per data line with
-    __study/__profile/__base/__sample_ids/__n/__cells. See
-    convert_cna_partitioned for the full design rationale."""
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.sources.tsv import (
-        header_line_and_names,
-    )
-
-    inputs = discover_cna_files(tsv_dir)
-    logger.info("found %d CNA files (single-job mode)", len(inputs))
-    if not inputs:
-        return [], [], None
-    manifest_rows = []
-    gps_rows = []
-    for item in inputs:
-        parsed = header_line_and_names(item.path)
-        if parsed is None:
-            raise ValueError(
-                f"single-job CNA mode: no parseable header in"
-                f" {item.path} (empty or quoted header)"
-            )
-        raw, names = parsed
-        sample_ids = [
-            f"{item.cancer_study_id}_{c}"
-            for c in names[cna_ops.FIRST_SAMPLE_IDX:]
-        ]
-        manifest_rows.append(
-            (
-                _spark_file_uri(item.path),
-                item.cancer_study_id,
-                item.genetic_profile_id,
-                os.path.basename(output_base(item.path, "")),
-                raw,
-                sample_ids,
-            )
-        )
-        gps_rows.append(
-            (
-                item.cancer_study_id,
-                item.genetic_profile_id,
-                ",".join(sample_ids),
-            )
-        )
-    mf = arrow_local_df(
-        spark,
-        manifest_rows,
-        "__file string, __study string, __profile string,"
-        " __base string, __header string, __sample_ids array<string>",
-    )
-    lines = spark.read.text([it.path for it in inputs]).select(
-        F.col("value"), F.input_file_name().alias("__file")
-    )
-    tagged = lines.join(F.broadcast(mf), "__file", "left")
-    missing = F.col("__study").isNull()
-    is_header = F.col("value") == F.col("__header")
-    # guard pass: every file must contribute exactly one header-match
-    # (and be present in the manifest) before anything is written, and
-    # no line may contain the csv quote char — this mode parses rows
-    # with a raw split(value, '\t'), which has NO quote semantics,
-    # while the per-study csv mode applies the default quote='"'; a
-    # quoted cell would silently diverge between the two modes, so it
-    # fails loud instead (the header itself is already quote-free:
-    # header_line_and_names rejects quoted headers up front)
-    bad = (
-        tagged.groupBy("__file")
-        .agg(
-            F.sum(is_header.cast("int")).alias("n_hdr"),
-            F.max(missing.cast("int")).alias("n_miss"),
-            F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
-        )
-        .where(
-            (F.col("n_hdr") != 1)
-            | (F.col("n_miss") > 0)
-            | (F.col("n_quote") > 0)
-        )
-        .limit(5)
-        .collect()
-    )
-    if bad:
-        raise ValueError(
-            "single-job CNA mode: header/quote guard failed for "
-            + ", ".join(
-                f"{r['__file']} (header_matches={r['n_hdr']},"
-                f" quote_lines={r['n_quote']})"
-                for r in bad
-            )
-            + " — files with quoted cells need the per-study csv mode"
-        )
-    n_samples = F.size("__sample_ids")
-    parts = F.split(F.col("value"), "\t")
-    # pad to header width: the csv path yields NULL (-> '') for short
-    # rows and drops fields beyond the schema; slice after padding
-    # reproduces both
-    padded = F.concat(
-        parts,
-        F.array_repeat(
-            F.lit(""),
-            F.greatest(
-                F.lit(0),
-                n_samples + F.lit(cna_ops.FIRST_SAMPLE_IDX) - F.size(parts),
-            ),
-        ),
-    )
-    # csv parity: the csv reader drops fully blank lines; text keeps
-    # them — filter to match (a line of only tabs is NOT blank)
-    data = tagged.where(~is_header & (F.col("value") != "")).select(
-        "__study",
-        "__profile",
-        "__base",
-        "__sample_ids",
-        n_samples.alias("__n"),
-        padded.alias("__cells"),
-    )
-    return inputs, gps_rows, data
-
-
-def convert_cna_partitioned(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    with_derived: bool = False,
-) -> int:
-    """Single-job CNA conversion for many-study corpora (the 100 TB
-    shape of D1/D2): ONE multi-path ``spark.read.text`` scan of every
-    matrix, positional parsing, per-file attribution from a broadcast
-    header manifest, one write per output table.
-
-    Why not a per-study plan union: the previous implementation built
-    one csv plan per study and unioned 1000 branches per table — each
-    branch is its own scan node and codegen unit, so the write stages
-    carried megabyte task binaries and 3x1000 codegen compilations;
-    measured 533.9s for 1000 small studies, SLOWER than the
-    max_workers=8 driver loop (229s). A CNA matrix's header is
-    per-study (sample columns differ), so same-header csv batching
-    (the mutations mode's trick, 29.6s at 1000 studies) cannot apply —
-    but the TRANSFORMS are positional, so the header never needs to
-    reach the distributed plan at all: ``split(value, '\\t')`` +
-    slice/array_join/posexplode reproduce pivot-concat and melt, and
-    per-file (study, profile, sample names) join in from a broadcast
-    manifest built by the same driver-side header reads the csv path
-    already does. Measured: 42.6s for the same 1000 studies (12.5x).
-
-    Sample NAMES matter only for SAMPLE_ID/ORDERED_SAMPLE_LIST, and
-    those use Spark's normalized header names (dup -> <name><idx>,
-    empty -> _cN) — taken from sources.tsv.header_line_and_names, the
-    SAME normalization the per-study mode's df.columns yields, so the
-    two modes write byte-identical tables (pinned by test).
-
-    genetic_profile_samples is pure header metadata: built driver-side
-    from the manifest (one metadata-scale write, zero scans).
-
-    Header-row removal is by byte-match against the file's raw header
-    line (a line-oriented scan has no 'first line of its file' marker
-    at task level); a guard aggregation counts header matches per file
-    first and raises if any file has != 1 — a data row forged to
-    byte-equal the header fails LOUD, never silently drops (the csv
-    path would keep such a row; divergence documented here).
-
-    Returns the number of study files planned. CNA posture: abort on
-    first failure (unreadable/headerless file raises).
-    """
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.schemas import (
-        GENETIC_PROFILE_SAMPLES_SCHEMA,
-    )
-
-    inputs, gps_rows, data = _cna_single_job_scan(spark, tsv_dir)
-    if not inputs:
-        return 0
-    # partition by AUXILIARY copies of the keys: empty-string values
-    # (meta-less files) would round-trip as NULL through hive partition
-    # directories, violating the no-null '' contract — the real data
-    # columns stay inside the files untouched
-    placeholder = F.lit("(none)")
-
-    def with_keys(df):
-        return df.withColumn(
-            "__p_study",
-            F.when(F.col("CANCER_STUDY") == "", placeholder).otherwise(
-                F.col("CANCER_STUDY")
-            ),
-        ).withColumn(
-            "__p_profile",
-            F.when(F.col("GENETIC_PROFILE") == "", placeholder).otherwise(
-                F.col("GENETIC_PROFILE")
-            ),
-        )
-
-    keys = ["__p_study", "__p_profile"]
-    os.makedirs(parquet_dir, exist_ok=True)
-    ga = data.select(
-        F.col("__study").alias("CANCER_STUDY"),
-        F.col("__profile").alias("GENETIC_PROFILE"),
-        F.coalesce(F.col("__cells")[0], F.lit("")).alias("GENE_SYMBOL"),
-        F.array_join(
-            F.slice(
-                F.col("__cells"),
-                cna_ops.FIRST_SAMPLE_IDX + 1,
-                F.col("__n"),
-            ),
-            ",",
-        ).alias("VALUES"),
-    )
-    write_parquet(
-        with_keys(ga),
-        os.path.join(parquet_dir, "genetic_alterations.parquet"),
-        partition_by=keys,
-    )
-    gps = arrow_local_df(spark, gps_rows, GENETIC_PROFILE_SAMPLES_SCHEMA)
-    write_parquet(
-        with_keys(gps),
-        os.path.join(parquet_dir, "genetic_profile_samples.parquet"),
-        partition_by=keys,
-    )
-    if with_derived:
-        exploded = data.select(
-            "__study",
-            "__profile",
-            "__sample_ids",
-            F.coalesce(F.col("__cells")[0], F.lit("")).alias("__gene"),
-            F.posexplode(
-                F.slice(
-                    F.col("__cells"),
-                    cna_ops.FIRST_SAMPLE_IDX + 1,
-                    F.col("__n"),
-                )
-            ).alias("__pos", "__alt"),
-        )
-        derived = exploded.select(
-            F.element_at(
-                F.col("__sample_ids"), F.col("__pos") + 1
-            ).alias("SAMPLE_ID"),
-            F.col("__study").alias("CANCER_STUDY"),
-            F.col("__gene").alias("GENE_SYMBOL"),
-            F.col("__profile").alias("GENETIC_PROFILE"),
-            F.col("__alt").alias("ALTERATION"),
-        )
-        write_parquet(
-            with_keys(derived),
-            os.path.join(parquet_dir, "derived.parquet"),
-            partition_by=keys,
-        )
-    return len(inputs)
-
-
-def convert_cna_grouped(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    with_derived: bool = False,
-) -> int:
-    """Single-job CNA conversion that writes the REFERENCE's
-    per-study-file layout (``<studyDir>_<stem>_{genetic_alterations,
-    genetic_profile_samples[,derived]}.parquet`` —
-    cna/transformer.go:266-297): the CNA twin of
-    convert_mutations_grouped (round-9 verdict #2).
-
-    Same plan as convert_cna_partitioned (ONE text scan, positional
-    parse, broadcast header manifest), but alterations/derived are
-    hive-partitioned by the per-file output base and promoted to the
-    reference filenames by a driver rename pass — one shuffle + one
-    write stage per table regardless of study count, vs the loop
-    mode's 3 write jobs per study. genetic_profile_samples is pure
-    header metadata with EXACTLY one row per file: all N files are
-    written driver-side via pyarrow (milliseconds each; a Spark job
-    per 1-row frame is the ~5s local-relation tax times N — the
-    32,000-task write stage round 9 killed, in a different costume).
-
-    Zero-data-row matrices produce schema-only alterations/derived
-    parquet (like the loop mode's empty Spark write); their sample
-    list row still exists (header metadata needs no data rows —
-    cna/transformer.go:498-508). Duplicate output bases refused.
-    Layout + row parity vs the loop mode pinned by test. CNA posture:
-    abort on first failure. Returns the number of files planned."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pa_pq
-    from pyspark.sql import functions as F
-
-    inputs, gps_rows, data = _cna_single_job_scan(spark, tsv_dir)
-    if not inputs:
-        return 0
-    bases = _check_unique_bases("convert_cna_grouped", inputs)
-    os.makedirs(parquet_dir, exist_ok=True)
-    staging = os.path.join(parquet_dir, ".grouped_staging_cna")
-    shutil.rmtree(staging, ignore_errors=True)
-    nparts = max(
-        1, min(len(inputs), spark.sparkContext.defaultParallelism * 4)
-    )
-    sample_slice = F.slice(
-        F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
-    )
-    ga = data.select(
-        "__base",
-        F.col("__study").alias("CANCER_STUDY"),
-        F.col("__profile").alias("GENETIC_PROFILE"),
-        F.coalesce(F.col("__cells")[0], F.lit("")).alias("GENE_SYMBOL"),
-        F.array_join(sample_slice, ",").alias("VALUES"),
-    )
-    tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
-    if with_derived:
-        exploded = data.select(
-            "__base",
-            "__study",
-            "__profile",
-            "__sample_ids",
-            F.coalesce(F.col("__cells")[0], F.lit("")).alias("__gene"),
-            F.posexplode(sample_slice).alias("__pos", "__alt"),
-        )
-        derived = exploded.select(
-            "__base",
-            F.element_at(
-                F.col("__sample_ids"), F.col("__pos") + 1
-            ).alias("SAMPLE_ID"),
-            F.col("__study").alias("CANCER_STUDY"),
-            F.col("__gene").alias("GENE_SYMBOL"),
-            F.col("__profile").alias("GENETIC_PROFILE"),
-            F.col("__alt").alias("ALTERATION"),
-        )
-        # ALTERATION in the sort key: a duplicated gene row with
-        # different values would otherwise tie on (gene, sample) and
-        # leave file byte-order run-dependent
-        tables.append(
-            ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
-        )
-    for suffix, df, sort_cols in tables:
-        stage_dir = os.path.join(staging, suffix)
-        (
-            df.repartition(nparts, F.col("__base"))
-            .sortWithinPartitions("__base", *sort_cols)
-            .write.mode("overwrite")
-            .partitionBy("__base")
-            .parquet(stage_dir)
-        )
-        _promote_partition_dirs(
-            stage_dir,
-            parquet_dir,
-            bases,
-            suffix,
-            _arrow_schema_without_base(df),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    gps_schema = pa.schema(
-        [
-            pa.field(n, pa.string())
-            for n in (
-                "CANCER_STUDY",
-                "GENETIC_PROFILE",
-                "ORDERED_SAMPLE_LIST",
-            )
-        ]
-    )
-    for base, (study, profile, osl) in zip(bases, gps_rows):
-        dest = os.path.join(
-            parquet_dir, f"{base}_genetic_profile_samples.parquet"
-        )
-        shutil.rmtree(dest, ignore_errors=True)
-        os.makedirs(dest, exist_ok=True)
-        pa_pq.write_table(
-            pa.table(
-                {
-                    "CANCER_STUDY": [study],
-                    "GENETIC_PROFILE": [profile],
-                    "ORDERED_SAMPLE_LIST": [osl],
-                },
-                schema=gps_schema,
-            ),
-            os.path.join(dest, "part-00000.parquet"),
-        )
-    return len(inputs)
-
-
-def _maf_header_sig(path: str) -> str:
-    """First non-``#`` line of a MAF — the csv header. Driver-side
-    single-line read (one fs open per file, no Spark job): multi-path
-    csv scans apply the FIRST file's header to every file, so the
-    single-job mode may only batch files whose headers are identical."""
-    with open(path, encoding="utf-8", errors="replace") as fh:
-        for line in fh:
-            if not line.startswith("#"):
-                return line.rstrip("\r\n")
-    return ""
-
-
-def _balanced_union(dfs: list[DataFrame]) -> DataFrame:
-    """Pairwise unionByName — a log-depth plan tree instead of a
-    left-deep chain (matters when unioning one frame per header
-    group)."""
-    while len(dfs) > 1:
-        dfs = [
-            dfs[i].unionByName(dfs[i + 1]) if i + 1 < len(dfs) else dfs[i]
-            for i in range(0, len(dfs), 2)
-        ]
-    return dfs[0]
-
-
-def _mutations_single_job_frames(
-    spark: SparkSession,
-    tsv_dir: str,
-    start_event_id: int,
-    inputs: list | None = None,
-) -> tuple[list, list[DataFrame]]:
-    """Shared scaffold of the single-job mutations modes: discovery,
-    header-signature grouping (Spark's multi-path csv scan applies the
-    first file's header to every file, so only same-header files may
-    share a scan), corpus-wide sequential ids in DISCOVERY order
-    (with_sequential_ids_multi + URI->rank map), and per-file
-    study/profile/output-base attribution joined from a broadcast
-    manifest keyed by the scan's file URI. Returns ``(inputs,
-    joined_frames)``; each joined frame carries the MAF columns +
-    MUTATION_EVENT_ID + __file/__study/__profile/__base. A scan file
-    missing from the manifest raises mid-plan (fail loud, never
-    silently unattributed).
-
-    ``inputs`` overrides discovery with a pre-filtered list (the
-    salvage mode hands in only its probe-healthy files; id assignment
-    then skips failed files exactly like the loop, where a failed
-    read consumes no ids)."""
-    from pyspark.sql import functions as F
-
-    if inputs is None:
-        inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files (single-job mode)", len(inputs))
-    if not inputs:
-        return [], []
-    groups: dict[str, list] = {}
-    for item in inputs:
-        groups.setdefault(_maf_header_sig(item.path), []).append(item)
-    frames = [
-        read_maf(spark, [it.path for it in g]) for g in groups.values()
-    ]
-    # global id order = DISCOVERY order (what the sequential loop
-    # iterates), carried by a URI->rank map: sorting the scan's
-    # percent-encoded URIs lexicographically could permute exotic
-    # filenames ('a b' -> 'a%20b') relative to the loop's raw paths
-    file_order = {
-        _spark_file_uri(it.path): i for i, it in enumerate(inputs)
-    }
-    ranked = mut_ops.with_sequential_ids_multi(
-        frames, start=start_event_id, file_order=file_order
-    )
-    manifest = [
-        (
-            _spark_file_uri(it.path),
-            it.cancer_study_id,
-            it.genetic_profile_id,
-            os.path.basename(output_base(it.path, "")),
-        )
-        for g in groups.values()
-        for it in g
-    ]
-    mf = arrow_local_df(
-        spark,
-        manifest,
-        "__file string, __study string, __profile string, __base string",
-    )
-    joined_frames = []
-    for r in ranked:
-        joined = r.join(F.broadcast(mf), "__file", "left").withColumn(
-            "__study",
-            F.when(
-                F.col("__study").isNull(),
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit(
-                            "single-job mutations mode: scan file"
-                            " missing from manifest:"
-                        ),
-                        F.col("__file"),
-                    )
-                ).cast("string"),
-            ).otherwise(F.col("__study")),
-        )
-        joined_frames.append(joined)
-    return inputs, joined_frames
-
-
-def convert_mutations_partitioned(
-    spark: SparkSession,
-    tsv_dir: str,
-    parquet_dir: str,
-    start_event_id: int = 0,
-) -> int:
-    """Single-job mutations conversion for many-study corpora — the
-    D3 dataflow at its 100 TB shape (compare convert_cna_partitioned).
-
-    The per-study mode is a driver loop: 2 write actions + 1 count per
-    file (measured 2.2s/study sequential, 0.8s/study at max_workers=8
-    — a scheduling floor, not data cost). Here files GROUP by header
-    signature (one driver-side first-line read each; Spark's
-    multi-path csv scan applies the first file's header to all files,
-    so only same-header files may share a scan), ids are assigned by
-    with_sequential_ids_multi — per-(file, partition) counts prefix-
-    summed GLOBALLY in sorted-path order, byte-identical to the
-    sequential loop's ids — and each output table unions across groups
-    and writes ONCE: two write jobs total regardless of study count.
-    Per-file study/profile attribution joins a broadcast manifest on
-    the scan's file tag. Output = the COMBINED tables directly
-    (mutation_event.parquet, mutation.parquet) — this mode fuses
-    convert + combine, which is what a 1000-study ingest actually
-    wants; per-study files, if needed, are a partition-pruned read
-    away via the GENETIC_PROFILE_ID hive partition on mutation.
-
-    Failure posture: all-or-nothing per run (one Spark job per table),
-    vs the loop modes' per-file isolation — at this shape, replays are
-    cheaper than partial-output bookkeeping. Returns the number of
-    files planned.
-    """
-    from pyspark.sql import functions as F
-
-    inputs, joined_frames = _mutations_single_job_frames(
-        spark, tsv_dir, start_event_id
-    )
-    if not inputs:
-        return 0
-    ev_parts, mut_parts = [], []
-    for joined in joined_frames:
-        ev_parts.append(mut_ops.mutation_event(joined))
-        mut_parts.append(
-            mut_ops.mutation(
-                joined, F.col("__study"), F.col("__profile")
-            )
-        )
-    os.makedirs(parquet_dir, exist_ok=True)
-    write_parquet(
-        _balanced_union(ev_parts),
-        os.path.join(parquet_dir, "mutation_event.parquet"),
-    )
-    # '' profile (meta-less file) would round-trip as NULL through a
-    # hive partition dir — same placeholder contract as the CNA mode
-    mut_all = _balanced_union(mut_parts).withColumn(
-        "__p_profile",
-        F.when(
-            F.col("GENETIC_PROFILE_ID") == "", F.lit("(none)")
-        ).otherwise(F.col("GENETIC_PROFILE_ID")),
-    )
-    write_parquet(
-        mut_all,
-        os.path.join(parquet_dir, "mutation.parquet"),
-        partition_by=["__p_profile"],
-    )
-    return len(inputs)
-
-
-def _check_unique_bases(mode: str, inputs: list) -> list[str]:
-    """Per-file output bases for the grouped modes; raises up front if
-    two inputs collide onto one ``<studyDir>_<stem>`` (the loop mode
-    would silently let the later write clobber the earlier one)."""
+def _check_unique_bases(mode: str, inputs: list) -> None:
+    """Raise up front if two inputs collide onto one ``<studyDir>_<stem>``
+    (same stem under different parents): the per-study layout cannot
+    represent both, and the later write would clobber the earlier."""
     from collections import Counter
 
-    bases = [os.path.basename(output_base(it.path, "")) for it in inputs]
-    dup = {b for b, n in Counter(bases).items() if n > 1}
+    dup = {b for b, n in Counter(map(_base, inputs)).items() if n > 1}
     if dup:
         raise ValueError(
             f"{mode}: multiple inputs map to the same output base(s)"
             f" {sorted(dup)[:5]} — the per-study layout cannot"
             " represent both"
         )
-    return bases
 
 
-def _promote_partition_dirs(
+@contextmanager
+def _staging_dir(parquet_dir: str, name: str):
+    """A fresh ``<parquet_dir>/<name>`` for one run's staged outputs,
+    removed on every exit path."""
+    path = os.path.join(parquet_dir, name)
+    shutil.rmtree(path, ignore_errors=True)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _stage_grouped(df: DataFrame, stage_dir: str, nparts: int, sort_cols) -> None:
+    """Write a grouped frame to ``stage_dir`` hive-partitioned by its
+    ``__base`` tag. ``repartition(n, __base)`` confines every file's
+    rows to one task, so each output gets exactly one part file;
+    ``sortWithinPartitions`` makes its row order deterministic. One
+    shuffle + one write stage per table, whatever the file count."""
+    from pyspark.sql import functions as F
+
+    (
+        df.repartition(nparts, F.col("__base"))
+        .sortWithinPartitions("__base", *sort_cols)
+        .write.mode("overwrite")
+        .partitionBy("__base")
+        .parquet(stage_dir)
+    )
+
+
+def _staged_moves(
     stage_dir: str,
     parquet_dir: str,
     bases: list[str],
     suffix: str,
     empty_schema,
-) -> None:
-    """Driver-side rename pass of the grouped modes: move each
-    ``__base=<v>`` partition dir of a staged partitionBy write to the
+) -> list[tuple[str, str]]:
+    """Map each ``__base=<v>`` partition dir of a staged write to the
     reference's ``<base>_<suffix>.parquet`` name. Dir names carry
     Spark's %XX partition-value escaping (urllib unquote reverses).
     Bases with no partition dir (zero-data-row inputs) get a schema-
-    only parquet written via pyarrow — milliseconds, vs ~5s per tiny
-    frame through the Python local-relation write path (the round-8
-    finding). A staged dir matching no input raises: silent output
-    loss is never acceptable here.
-
-    Scale note (round-10 verdict): this pass is driver-serial — one
-    ``os.rename`` per output, ~zero cost to N=1,000 (measured inside
-    the 42.7s grouped run) but the bottleneck at N~100k studies; if
-    that shape ever materializes, thread-pool the renames (they are
-    independent same-filesystem moves) or commit the mapping to a
-    catalog instead of materializing reference filenames."""
-    import shutil
+    only parquet staged via pyarrow — milliseconds, vs ~5s per tiny
+    frame through the Python local-relation write path. A staged dir
+    matching no input raises: silent output loss is never acceptable."""
     from urllib.parse import unquote
 
     import pyarrow.parquet as pa_pq
 
-    found = {}
-    for d in os.listdir(stage_dir):
-        if d.startswith("__base="):
-            found[unquote(d[len("__base=") :])] = os.path.join(stage_dir, d)
-    for base in bases:
-        dest = os.path.join(parquet_dir, f"{base}_{suffix}.parquet")
-        shutil.rmtree(dest, ignore_errors=True)
+    found = {
+        unquote(d[len("__base=") :]): os.path.join(stage_dir, d)
+        for d in os.listdir(stage_dir)
+        if d.startswith("__base=")
+    }
+    moves = []
+    for i, base in enumerate(bases):
         src = found.pop(base, None)
-        if src is not None:
-            os.rename(src, dest)
-        else:
-            os.makedirs(dest, exist_ok=True)
+        if src is None:
+            src = os.path.join(stage_dir, f"_empty{i}")
+            os.makedirs(src)
             pa_pq.write_table(
                 empty_schema.empty_table(),
-                os.path.join(dest, "part-00000-empty.parquet"),
+                os.path.join(src, "part-00000-empty.parquet"),
             )
+        moves.append((src, os.path.join(parquet_dir, f"{base}_{suffix}.parquet")))
     if found:
         raise RuntimeError(
             "grouped mode: staging produced partition dirs with no"
             f" matching input: {sorted(found)[:5]}"
         )
+    return moves
+
+
+def _promote(moves: list[tuple[str, str]]) -> None:
+    """Rename every staged output to its reference name, replacing an
+    earlier run's output. Called only once ALL tables of a run are
+    staged, so a failed write never leaves one table of a study (say
+    ``*_mutation_event``) promoted without its siblings.
+
+    Scale note: one driver-serial ``os.rename`` per output, ~zero cost
+    to N=1,000; at N~100k studies thread-pool the renames (independent
+    same-filesystem moves) or commit the mapping to a catalog."""
+    for src, dest in moves:
+        shutil.rmtree(dest, ignore_errors=True)
+        os.rename(src, dest)
 
 
 def _arrow_schema_without_base(df: DataFrame):
@@ -988,98 +232,521 @@ def _arrow_schema_without_base(df: DataFrame):
     )
 
 
-def convert_mutations_grouped(
+def _nparts(spark: SparkSession, n_files: int) -> int:
+    return max(1, min(n_files, spark.sparkContext.defaultParallelism * 4))
+
+
+def _write_cna_outputs(
+    spark: SparkSession, item, out_dir: str, with_derived: bool
+) -> None:
+    """Per-file csv conversion of one CNA matrix — the quote fallback
+    of convert_cna_grouped. The csv reader applies quote='"', which the
+    grouped plan's raw tab split cannot. One scan ->
+    genetic_alterations + genetic_profile_samples (+ derived), one part
+    file each, under ``out_dir``."""
+    base = output_base(item.path, out_dir)
+    study, profile = item.cancer_study_id, item.genetic_profile_id
+    df = read_cna_matrix(spark, item.path)
+    tables = {
+        "genetic_alterations": cna_ops.genetic_alterations(df, study, profile),
+        "genetic_profile_samples": cna_ops.genetic_profile_samples(
+            spark, df, study, profile
+        ),
+    }
+    if with_derived:
+        tables["derived"] = cna_ops.cna_derived(df, study, profile)
+    for suffix, out in tables.items():
+        write_parquet(out, f"{base}_{suffix}.parquet", single_file=True)
+
+
+def _cna_single_job_scan(
+    spark: SparkSession, inputs: list
+) -> tuple[list[tuple], list, DataFrame | None]:
+    """Plan the grouped CNA scan: driver-side header parse (manifest +
+    per-file sample lists), ONE multi-path ``spark.read.text`` scan,
+    broadcast attribution join, the header/quote guard aggregation,
+    and positional cell parsing. Returns ``(grouped, fallback, data)``:
+    ``grouped`` pairs each file the plan converts with its sample ids,
+    ``fallback`` lists the files left to the per-file csv writer, and
+    ``data`` carries one row per data line of the grouped files with
+    __base/__study/__profile/__sample_ids/__n/__cells (None when no
+    file is grouped).
+
+    Why one text scan: a union of one csv plan per study makes every
+    branch its own scan node and codegen unit — 533.9s for 1000 small
+    studies, slower than an 8-thread per-study loop (229s). A CNA
+    header is per-study (sample columns differ), so same-header csv
+    batching cannot apply, but the transforms are positional:
+    ``split(value, '\\t')`` + slice/array_join/posexplode reproduce
+    pivot-concat and melt, and per-file (study, profile, sample names)
+    join in from a broadcast manifest (42.6s for the same corpus).
+    Sample names use header_line_and_names — the same normalization
+    (dup -> <name><idx>, empty -> _cN) the csv reader's df.columns
+    yields.
+
+    Header rows are dropped by byte-match against the file's raw header
+    line (a line scan has no 'first line of its file' marker), so the
+    guard requires exactly one match per file: a data row forged to
+    byte-equal the header fails loud instead of being dropped (the csv
+    path would keep it). A raw split has no quote semantics, so a file
+    with a '"' in its header or in any cell is left out of the plan and
+    converted alone by _write_cna_outputs. Header-count mismatches,
+    files missing from the manifest and empty files abort the run."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_only_importer_prototype_spark.sources.tsv import (
+        header_line_and_names,
+    )
+
+    manifest_rows = []
+    grouped = []
+    for item in inputs:
+        parsed = header_line_and_names(item.path)
+        if parsed is None:
+            with open(item.path, encoding="utf-8", errors="replace") as fh:
+                if '"' not in fh.readline():
+                    raise ValueError(f"convert-cna: no header in {item.path}")
+            continue
+        raw, names = parsed
+        sample_ids = [
+            f"{item.cancer_study_id}_{c}"
+            for c in names[cna_ops.FIRST_SAMPLE_IDX:]
+        ]
+        manifest_rows.append(
+            (
+                _spark_file_uri(item.path),
+                item.cancer_study_id,
+                item.genetic_profile_id,
+                _base(item),
+                raw,
+                sample_ids,
+            )
+        )
+        grouped.append((item, sample_ids))
+    if not grouped:
+        return [], list(inputs), None
+    mf = arrow_local_df(
+        spark,
+        manifest_rows,
+        "__file string, __study string, __profile string,"
+        " __base string, __header string, __sample_ids array<string>",
+    )
+    lines = spark.read.text([it.path for it, _ in grouped]).select(
+        F.col("value"), F.input_file_name().alias("__file")
+    )
+    tagged = lines.join(F.broadcast(mf), "__file", "left")
+    missing = F.col("__study").isNull()
+    is_header = F.col("value") == F.col("__header")
+    # guard pass, one aggregation before anything is written: it
+    # collects every file that breaks the header contract or holds a
+    # quote char
+    flagged = (
+        tagged.groupBy("__file")
+        .agg(
+            F.sum(is_header.cast("int")).alias("n_hdr"),
+            F.max(missing.cast("int")).alias("n_miss"),
+            F.sum(F.col("value").contains('"').cast("int")).alias("n_quote"),
+        )
+        .where(
+            (F.col("n_hdr") != 1)
+            | (F.col("n_miss") > 0)
+            | (F.col("n_quote") > 0)
+        )
+        .collect()
+    )
+    broken = [r for r in flagged if r["n_hdr"] != 1 or r["n_miss"] > 0]
+    if broken:
+        raise ValueError(
+            "convert-cna: header guard failed for "
+            + ", ".join(
+                f"{r['__file']} (header_matches={r['n_hdr']},"
+                f" in_manifest={not r['n_miss']})"
+                for r in broken[:5]
+            )
+        )
+    quoted_cells = {r["__file"] for r in flagged}
+    if quoted_cells:
+        grouped = [
+            g for g in grouped if _spark_file_uri(g[0].path) not in quoted_cells
+        ]
+        tagged = tagged.where(~F.col("__file").isin(*quoted_cells))
+    grouped_paths = {it.path for it, _ in grouped}
+    fallback = [it for it in inputs if it.path not in grouped_paths]
+    if not grouped:
+        return [], fallback, None
+    n_samples = F.size("__sample_ids")
+    parts = F.split(F.col("value"), "\t")
+    # pad to header width: the csv path yields NULL (-> '') for short
+    # rows and drops fields beyond the schema; slice after padding
+    # reproduces both
+    padded = F.concat(
+        parts,
+        F.array_repeat(
+            F.lit(""),
+            F.greatest(
+                F.lit(0),
+                n_samples + F.lit(cna_ops.FIRST_SAMPLE_IDX) - F.size(parts),
+            ),
+        ),
+    )
+    # csv parity: the csv reader drops fully blank lines; text keeps
+    # them — filter to match (a line of only tabs is NOT blank)
+    data = tagged.where(~is_header & (F.col("value") != "")).select(
+        "__base",
+        "__study",
+        "__profile",
+        "__sample_ids",
+        n_samples.alias("__n"),
+        padded.alias("__cells"),
+    )
+    return grouped, fallback, data
+
+
+def convert_cna_grouped(
     spark: SparkSession,
     tsv_dir: str,
     parquet_dir: str,
-    start_event_id: int = 0,
-    inputs: list | None = None,
+    with_derived: bool = False,
 ) -> int:
-    """Single-job mutations conversion that writes the REFERENCE's
-    per-study-file output layout (``<studyDir>_<stem>_mutation[_event]
-    .parquet`` — cna/transformer.go:266-297 naming applied by the
-    mutation CLI): the scale answer to the per-study loop's measured
-    DAGScheduler floor (round-9 verdict #2).
+    """convert-cna[-with-derived] (cmd/cli/main.go:111-151): the
+    reference's per-study-file layout (``<studyDir>_<stem>_{genetic_
+    alterations,genetic_profile_samples[,derived]}.parquet`` —
+    cna/transformer.go:266-297) from one grouped Spark plan.
 
-    The loop mode pays ~12 scheduler stages PER FILE (rank counts +
-    window + 2 coalesce(1) writes + next-id agg), ~0.9s/study at
-    N=1,000 — pure per-job overhead, not data cost. Here the whole
-    corpus runs as the partitioned mode's plan (shared scaffold:
-    discovery-order ids, broadcast attribution) but each table is
-    written ONCE, hive-partitioned by a synthetic per-file key
-    (``__base`` = the reference's output stem), then a driver-side
-    rename pass moves each partition dir to its reference filename.
-    ``repartition(n, __base)`` confines every file's rows to one task
-    => exactly one part file per output, like the loop's
-    ``single_file=True``; ``sortWithinPartitions(__base, id)`` makes
-    file content order deterministic. Total Spark work: one scan +
-    one shuffle + one write stage per table, independent of study
-    count.
+    Alterations/derived come from _cna_single_job_scan's single text
+    scan, staged hive-partitioned by the per-file output base and
+    renamed to the reference filenames: one shuffle + one write stage
+    per table regardless of study count. genetic_profile_samples is
+    pure header metadata with EXACTLY one row per file, written
+    driver-side via pyarrow (a Spark job per 1-row frame is ~5s of
+    local-relation overhead times N). A file holding a csv quote char
+    converts alone through _write_cna_outputs (logged).
 
-    Inputs whose MAF has zero data rows produce no partition dir;
-    their outputs are written as schema-only parquet driver-side via
-    pyarrow (milliseconds; the Python local-relation write path costs
-    ~5s per tiny frame on this runtime — the round-8 finding), so the
-    output SET matches the loop mode exactly. Two distinct inputs
-    colliding onto one output base (same ``<studyDir>_<stem>`` under
-    different parents) raise up front — the loop mode would silently
-    let the later write clobber the earlier one.
-
-    Row-level parity with the loop mode is pinned by test (ids, rows,
-    one file per output, empty-input outputs). Failure posture:
-    all-or-nothing per run, like the partitioned mode — use
-    convert_mutations_grouped_salvage for the loop mode's per-file
-    isolation (D4) at grouped cost. ``inputs`` overrides discovery
-    (the salvage wrapper passes its probe-healthy subset). Returns the
-    number of files planned."""
-    import shutil
-
+    Zero-data-row matrices produce schema-only alterations/derived
+    parquet; their sample list row still exists (header metadata needs
+    no data rows — cna/transformer.go:498-508). Duplicate output bases
+    are refused. CNA posture: abort on the first failure
+    (cna/transformer.go:30-45) — every output is staged and promoted
+    only after all tables are written, so an aborted run promotes
+    nothing. Returns the number of files converted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pa_pq
     from pyspark.sql import functions as F
 
-    inputs, joined_frames = _mutations_single_job_frames(
-        spark, tsv_dir, start_event_id, inputs=inputs
-    )
+    inputs = discover_cna_files(tsv_dir)
+    logger.info("found %d CNA files", len(inputs))
     if not inputs:
         return 0
-    bases = _check_unique_bases("convert_mutations_grouped", inputs)
-    ev_all = _balanced_union(
-        [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
-    )
-    mut_all = _balanced_union(
-        [
-            mut_ops.mutation(
-                j, F.col("__study"), F.col("__profile"), keep=("__base",)
-            )
-            for j in joined_frames
-        ]
-    )
+    _check_unique_bases("convert_cna_grouped", inputs)
+    grouped, fallback, data = _cna_single_job_scan(spark, inputs)
     os.makedirs(parquet_dir, exist_ok=True)
-    staging = os.path.join(parquet_dir, ".grouped_staging")
-    shutil.rmtree(staging, ignore_errors=True)
-    nparts = max(
-        1, min(len(inputs), spark.sparkContext.defaultParallelism * 4)
-    )
-    for suffix, df in (
-        ("mutation_event", ev_all),
-        ("mutation", mut_all),
-    ):
-        stage_dir = os.path.join(staging, suffix)
-        (
-            df.repartition(nparts, F.col("__base"))
-            .sortWithinPartitions("__base", mut_ops.EVENT_ID)
-            .write.mode("overwrite")
-            .partitionBy("__base")
-            .parquet(stage_dir)
-        )
-        _promote_partition_dirs(
-            stage_dir,
-            parquet_dir,
-            bases,
-            suffix,
-            _arrow_schema_without_base(df),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    with _staging_dir(parquet_dir, ".grouped_staging_cna") as staging:
+        moves = []
+        if data is not None:
+            bases = [_base(it) for it, _ in grouped]
+            sample_slice = F.slice(
+                F.col("__cells"), cna_ops.FIRST_SAMPLE_IDX + 1, F.col("__n")
+            )
+            gene = F.coalesce(F.col("__cells")[0], F.lit(""))
+            ga = data.select(
+                "__base",
+                F.col("__study").alias("CANCER_STUDY"),
+                F.col("__profile").alias("GENETIC_PROFILE"),
+                gene.alias("GENE_SYMBOL"),
+                F.array_join(sample_slice, ",").alias("VALUES"),
+            )
+            tables = [("genetic_alterations", ga, ["GENE_SYMBOL", "VALUES"])]
+            if with_derived:
+                exploded = data.select(
+                    "__base",
+                    "__study",
+                    "__profile",
+                    "__sample_ids",
+                    gene.alias("__gene"),
+                    F.posexplode(sample_slice).alias("__pos", "__alt"),
+                )
+                derived = exploded.select(
+                    "__base",
+                    F.element_at(
+                        F.col("__sample_ids"), F.col("__pos") + 1
+                    ).alias("SAMPLE_ID"),
+                    F.col("__study").alias("CANCER_STUDY"),
+                    F.col("__gene").alias("GENE_SYMBOL"),
+                    F.col("__profile").alias("GENETIC_PROFILE"),
+                    F.col("__alt").alias("ALTERATION"),
+                )
+                # ALTERATION in the sort key: a duplicated gene row with
+                # different values would otherwise tie on (gene, sample)
+                # and leave file byte-order run-dependent
+                tables.append(
+                    ("derived", derived, ["GENE_SYMBOL", "SAMPLE_ID", "ALTERATION"])
+                )
+            nparts = _nparts(spark, len(grouped))
+            for suffix, df, sort_cols in tables:
+                stage_dir = os.path.join(staging, suffix)
+                _stage_grouped(df, stage_dir, nparts, sort_cols)
+                moves += _staged_moves(
+                    stage_dir,
+                    parquet_dir,
+                    bases,
+                    suffix,
+                    _arrow_schema_without_base(df),
+                )
+            gps_schema = pa.schema(
+                [
+                    pa.field(n, pa.string())
+                    for n in (
+                        "CANCER_STUDY",
+                        "GENETIC_PROFILE",
+                        "ORDERED_SAMPLE_LIST",
+                    )
+                ]
+            )
+            for (item, sample_ids), base in zip(grouped, bases):
+                name = f"{base}_genetic_profile_samples.parquet"
+                src = os.path.join(staging, "genetic_profile_samples", name)
+                os.makedirs(src)
+                pa_pq.write_table(
+                    pa.table(
+                        [
+                            [item.cancer_study_id],
+                            [item.genetic_profile_id],
+                            [",".join(sample_ids)],
+                        ],
+                        schema=gps_schema,
+                    ),
+                    os.path.join(src, "part-00000.parquet"),
+                )
+                moves.append((src, os.path.join(parquet_dir, name)))
+        if fallback:
+            logger.warning(
+                "%d CNA file(s) hold a csv quote char; converting each"
+                " with the per-file csv reader: %s",
+                len(fallback),
+                [it.path for it in fallback],
+            )
+            fb_dir = os.path.join(staging, "fallback")
+            for item in fallback:
+                _write_cna_outputs(spark, item, fb_dir, with_derived)
+            moves += [
+                (os.path.join(fb_dir, n), os.path.join(parquet_dir, n))
+                for n in sorted(os.listdir(fb_dir))
+            ]
+        _promote(moves)
     return len(inputs)
+
+
+def _write_mutation_outputs(
+    spark: SparkSession, item, parquet_dir: str, start: int
+) -> int:
+    """Per-file mutation write — the salvage replay of
+    convert_mutations_grouped_salvage: read the MAF, assign ids from
+    ``start``, write both per-study outputs (one part file each).
+    Returns the next free id (an empty MAF keeps the counter unchanged
+    — must not reset). On failure, partial outputs are removed (a stale
+    mutation_event parquet would enter the combine glob with an id
+    range another file may legitimately hold) and the error re-raised;
+    the cached frame is unpersisted on EVERY path so a failed file
+    never pins executor storage for the session."""
+    base = output_base(item.path, parquet_dir)
+    out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
+    try:
+        df = read_maf(spark, item.path)
+        with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
+        try:
+            write_parquet(
+                mut_ops.mutation_event(with_ids), out_paths[0], single_file=True
+            )
+            write_parquet(
+                mut_ops.mutation(
+                    with_ids, item.cancer_study_id, item.genetic_profile_id
+                ),
+                out_paths[1],
+                single_file=True,
+            )
+            return mut_ops.next_event_id(with_ids, start=start)
+        finally:
+            with_ids.unpersist()
+    except Exception:
+        for p in out_paths:
+            shutil.rmtree(p, ignore_errors=True)
+        raise
+
+
+# Driver threads of the salvage probe: its per-file count jobs are
+# blocking JVM calls, so threads overlap the scheduling waits.
+_PROBE_THREADS = 8
+
+
+def _probe_maf_counts(
+    spark: SparkSession, inputs: list, failed: dict[str, str]
+) -> dict[str, int]:
+    """Salvage probe: one column-pruned count scan per file on
+    ``_PROBE_THREADS`` driver threads. A file failing its read lands in
+    ``failed`` and consumes no ids."""
+    from concurrent.futures import ThreadPoolExecutor, as_completed
+
+    counts: dict[str, int] = {}
+    with ThreadPoolExecutor(max_workers=_PROBE_THREADS) as pool:
+
+        def count_one(item) -> tuple[str, int]:
+            return item.path, read_maf(spark, item.path).count()
+
+        futures = {pool.submit(count_one, it): it for it in inputs}
+        for fut in as_completed(futures):
+            item = futures[fut]
+            try:
+                path, n = fut.result()
+                counts[path] = n
+            except Exception as exc:  # noqa: BLE001 — D4 isolation
+                logger.error("failed to read %s: %s", item.path, exc)
+                failed[item.path] = str(exc)
+    return counts
+
+
+def _maf_header_sig(path: str) -> str:
+    """First non-``#`` line of a MAF — the csv header. Driver-side
+    single-line read (one fs open per file, no Spark job): multi-path
+    csv scans apply the FIRST file's header to every file, so the
+    grouped plan may only batch files whose headers are identical."""
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        for line in fh:
+            if not line.startswith("#"):
+                return line.rstrip("\r\n")
+    return ""
+
+
+def _balanced_union(dfs: list[DataFrame]) -> DataFrame:
+    """Pairwise unionByName — a log-depth plan tree instead of a
+    left-deep chain (matters when unioning one frame per header
+    group)."""
+    while len(dfs) > 1:
+        dfs = [
+            dfs[i].unionByName(dfs[i + 1]) if i + 1 < len(dfs) else dfs[i]
+            for i in range(0, len(dfs), 2)
+        ]
+    return dfs[0]
+
+
+def _mutations_single_job_frames(
+    spark: SparkSession, inputs: list, start_event_id: int
+) -> list[DataFrame]:
+    """Plan the grouped mutations scan over ``inputs``: header-
+    signature grouping (Spark's multi-path csv scan applies the first
+    file's header to every file, so only same-header files may share a
+    scan), corpus-wide sequential ids in the order of ``inputs``
+    (with_sequential_ids_multi + URI->rank map), and per-file
+    study/profile/output-base attribution joined from a broadcast
+    manifest keyed by the scan's file URI. Returns one frame per header
+    group carrying the MAF columns + MUTATION_EVENT_ID +
+    __file/__study/__profile/__base. A scan file missing from the
+    manifest raises mid-plan (fail loud, never silently
+    unattributed)."""
+    from pyspark.sql import functions as F
+
+    groups: dict[str, list] = {}
+    for item in inputs:
+        groups.setdefault(_maf_header_sig(item.path), []).append(item)
+    frames = [
+        read_maf(spark, [it.path for it in g]) for g in groups.values()
+    ]
+    # global id order = the order of ``inputs`` (discovery order),
+    # carried by a URI->rank map: sorting the scan's percent-encoded
+    # URIs lexicographically could permute exotic filenames
+    # ('a b' -> 'a%20b') relative to the raw paths
+    file_order = {
+        _spark_file_uri(it.path): i for i, it in enumerate(inputs)
+    }
+    ranked = mut_ops.with_sequential_ids_multi(
+        frames, start=start_event_id, file_order=file_order
+    )
+    manifest = [
+        (
+            _spark_file_uri(it.path),
+            it.cancer_study_id,
+            it.genetic_profile_id,
+            _base(it),
+        )
+        for it in inputs
+    ]
+    mf = arrow_local_df(
+        spark,
+        manifest,
+        "__file string, __study string, __profile string, __base string",
+    )
+    return [
+        r.join(F.broadcast(mf), "__file", "left").withColumn(
+            "__study",
+            F.when(
+                F.col("__study").isNull(),
+                F.raise_error(
+                    F.concat_ws(
+                        " ",
+                        F.lit(
+                            "grouped mutations plan: scan file"
+                            " missing from manifest:"
+                        ),
+                        F.col("__file"),
+                    )
+                ).cast("string"),
+            ).otherwise(F.col("__study")),
+        )
+        for r in ranked
+    ]
+
+
+def _write_mutations_grouped(
+    spark: SparkSession, parquet_dir: str, inputs: list, start_event_id: int
+) -> None:
+    """Grouped write of the probe-healthy ``inputs`` in the reference's
+    per-study layout (``<studyDir>_<stem>_mutation[_event].parquet``).
+
+    A per-study loop pays ~12 scheduler stages PER FILE (rank counts +
+    window + 2 coalesce(1) writes + next-id agg), ~0.9s/study at
+    N=1,000 — pure per-job overhead. Here the corpus runs as one plan
+    (discovery-order ids, broadcast attribution), each table staged
+    once by _stage_grouped and promoted by rename after both are
+    written: one scan + one shuffle + one write stage per table,
+    independent of study count. Inputs whose MAF has zero data rows
+    get schema-only outputs, so the output SET covers every input.
+    All-or-nothing: any failure raises and promotes nothing."""
+    from pyspark.sql import functions as F
+
+    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
+    tables = (
+        (
+            "mutation_event",
+            _balanced_union(
+                [mut_ops.mutation_event(j, keep=("__base",)) for j in joined_frames]
+            ),
+        ),
+        (
+            "mutation",
+            _balanced_union(
+                [
+                    mut_ops.mutation(
+                        j, F.col("__study"), F.col("__profile"), keep=("__base",)
+                    )
+                    for j in joined_frames
+                ]
+            ),
+        ),
+    )
+    bases = [_base(it) for it in inputs]
+    nparts = _nparts(spark, len(inputs))
+    with _staging_dir(parquet_dir, ".grouped_staging") as staging:
+        moves = []
+        for suffix, df in tables:
+            stage_dir = os.path.join(staging, suffix)
+            _stage_grouped(df, stage_dir, nparts, [mut_ops.EVENT_ID])
+            moves += _staged_moves(
+                stage_dir,
+                parquet_dir,
+                bases,
+                suffix,
+                _arrow_schema_without_base(df),
+            )
+        _promote(moves)
 
 
 def convert_mutations_grouped_salvage(
@@ -1087,61 +754,49 @@ def convert_mutations_grouped_salvage(
     tsv_dir: str,
     parquet_dir: str,
     start_event_id: int = 0,
-    max_workers: int = 8,
 ) -> RunSummary:
-    """convert_mutations_grouped with the loop mode's per-file failure
-    isolation (D4, mutation/transformer.go:37-73) — round-10 verdict
-    #3: the grouped single-job write is all-or-nothing, so one corrupt
-    MAF used to cost the whole corpus a replay.
+    """convert-mutations (cmd/cli/main.go:396-424): event ids dense
+    and gapless across all files in discovery order, per-file failures
+    tolerated and reported (D4, mutation/transformer.go:37-73).
 
     Three phases:
 
-      1. **Probe** — one column-pruned count scan per file (thread
-         pool; the exact read the loop mode performs, so a probe
-         failure IS a loop-mode read failure). Failing files go to the
-         failure manifest (``RunSummary.failed``) and consume no ids —
-         identical to the loop, so phase 2's ids stay byte-equal to a
-         loop run over the same tree.
-      2. **Grouped write** — convert_mutations_grouped over only the
+      1. **Probe** — one column-pruned count scan per file
+         (_probe_maf_counts). Failing files go to the failure manifest
+         (``RunSummary.failed``) and consume no ids, as in the
+         reference's sequential loop.
+      2. **Grouped write** — _write_mutations_grouped over only the
          healthy files: one scan + one shuffle + one write per table,
          the corrupt file excluded instead of poisoning the job.
          Duplicate output bases are checked over ALL inputs up front
-         (a replayed file must never clobber a healthy output).
+         (a replayed file must never clobber a healthy output). A
+         failure here aborts the run.
       3. **Salvage replay** — each failed file retried through the
-         LOOP path (read -> ids -> both writes, partial outputs
-         removed on failure). A deterministic corruption fails again
-         and stays in the manifest; a transient failure recovers. A
-         replayed success takes ids PAST the healthy range (unique,
-         ordered, gapless within each phase) — splicing it back into
-         discovery order would require rewriting every later file,
-         which is the all-or-nothing posture this mode exists to
-         avoid; documented, and the manifest names exactly which files
-         took late ids.
+         per-file writer (_write_mutation_outputs: read -> ids -> both
+         writes, partial outputs removed on failure). A deterministic
+         corruption fails again and stays in the manifest; a transient
+         failure recovers. A replayed success takes ids PAST the
+         healthy range (unique, ordered, gapless within each phase) —
+         splicing it back into discovery order would require rewriting
+         every later file; the manifest names exactly which files took
+         late ids.
 
-    Cost on the happy path: the probe's count scans (the same phase-A
-    scans convert_mutations max_workers>1 already pays) on top of the
-    grouped job. Returns the loop modes' RunSummary (processed +
-    failure manifest)."""
+    Returns a RunSummary (processed + failure manifest)."""
     inputs = discover_mutation_files(tsv_dir)
-    logger.info("found %d mutation files (grouped-salvage)", len(inputs))
+    logger.info("found %d mutation files", len(inputs))
     summary = RunSummary()
     if not inputs:
         return summary
     _check_unique_bases("convert_mutations_grouped_salvage", inputs)
     os.makedirs(parquet_dir, exist_ok=True)
 
-    counts = _probe_maf_counts(spark, inputs, max_workers, summary.failed)
+    counts = _probe_maf_counts(spark, inputs, summary.failed)
     healthy = [it for it in inputs if it.path in counts]
     if healthy:
-        convert_mutations_grouped(
-            spark, tsv_dir, parquet_dir, start_event_id, inputs=healthy
-        )
+        _write_mutations_grouped(spark, parquet_dir, healthy, start_event_id)
         summary.processed = [it.path for it in healthy]
 
-    # salvage replay of the manifest through the loop path (the SHARED
-    # per-file writer, so layout/id/cleanup semantics are the loop's
-    # by construction — incl. single_file=True), fresh ids past the
-    # healthy range
+    # salvage replay of the manifest, fresh ids past the healthy range
     next_id = start_event_id + sum(counts.values())
     for item in inputs:  # discovery order, deterministic replay ids
         if item.path not in summary.failed:
@@ -1179,7 +834,8 @@ def load_clickhouse(
     """convert -> load: the deployment tail of the S9 north star over
     the jar-free HTTP interface. For each catalog kind, union-all every
     ``*_<kind>.parquet`` (per-study outputs) plus a bare
-    ``<kind>.parquet`` (single-job combined outputs) under
+    ``<kind>.parquet`` (the fused-combined form an earlier version's
+    partitioned convert mode wrote) under
     ``parquet_dir`` in one multi-path scan and bulk-insert it with
     ``write_clickhouse_http`` — one distributed job per table.
     ``combined-*`` outputs are EXCLUDED: they are derivable duplicates
@@ -1188,11 +844,11 @@ def load_clickhouse(
     explicitly if that is the intent.
 
     Both naming forms present for one kind is REFUSED up front (same
-    posture as the grouped modes' duplicate-base check): per-study
+    posture as the convert modes' duplicate-base check): per-study
     ``*_<kind>.parquet`` files next to a bare ``<kind>.parquet`` means
-    a loop/grouped run and a partitioned (fused-combined) run wrote
-    into the same -parquet-dir — loading the union would silently
-    double every row of that kind (round-10 advice).
+    a per-study run and a partitioned (fused-combined) run wrote into
+    the same -parquet-dir — loading the union would silently double
+    every row of that kind (round-10 advice).
 
     ``create_tables`` first executes the catalog DDL (MergeTree
     CREATE TABLE IF NOT EXISTS from sinks.clickhouse.catalog_ddl)
@@ -1249,7 +905,6 @@ def combine_parquet(
     spark: SparkSession,
     pattern: str,
     output_path: str,
-    single_file: bool = True,
 ) -> int:
     """U1 union-all by glob (cna/reader_parquet.go:86-143).
 
@@ -1263,7 +918,7 @@ def combine_parquet(
         logger.warning("no files matched %s", pattern)
         return 0
     df: DataFrame = spark.read.parquet(*paths)
-    write_parquet(df, output_path, single_file=single_file)
+    write_parquet(df, output_path, single_file=True)
     return len(paths)
 
 

@@ -84,9 +84,7 @@ def test_long_path_pivot_concat_matches_wide(spark, study_tree):
 
 def test_convert_cna_end_to_end(spark, study_tree, tmp_path):
     out = str(tmp_path / "parquet")
-    summary = pipelines.convert_cna(spark, study_tree, out, with_derived=True)
-    assert summary.ok
-    assert len(summary.processed) == 2
+    assert pipelines.convert_cna_grouped(spark, study_tree, out, with_derived=True) == 2
     ga = spark.read.parquet(os.path.join(out, "study_a_data_cna_genetic_alterations.parquet"))
     assert ga.count() == 3
     derived = spark.read.parquet(os.path.join(out, "study_b_data_cna_derived.parquet"))

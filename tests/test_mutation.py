@@ -23,7 +23,7 @@ def test_maf_comment_skip(spark, study_tree):
 
 def test_event_ids_dense_across_files(spark, study_tree, tmp_path):
     out = str(tmp_path / "parquet")
-    summary = pipelines.convert_mutations(spark, study_tree, out)
+    summary = pipelines.convert_mutations_grouped_salvage(spark, study_tree, out)
     assert summary.ok
     a = spark.read.parquet(os.path.join(out, "study_a_data_mutations_mutation_event.parquet"))
     b = spark.read.parquet(
@@ -127,7 +127,7 @@ def test_start_event_id_threading(spark, study_tree):
 
 def test_combine_mutations(spark, study_tree, tmp_path):
     out = str(tmp_path / "parquet")
-    pipelines.convert_mutations(spark, study_tree, out)
+    pipelines.convert_mutations_grouped_salvage(spark, study_tree, out)
     counts = pipelines.combine_mutations(spark, out)
     assert counts == {"mutation_event": 2, "mutation": 2}
     combined = spark.read.parquet(os.path.join(out, "combined-all-cna_mutation.parquet"))

@@ -837,10 +837,12 @@ def test_load_clickhouse_end_to_end(spark, tmp_path):
         "TP53\t7157\tS1\nKRAS\t3845\tS2\n"
     )
     out = tmp_path / "out_l"
-    assert pipelines.convert_cna(
+    assert pipelines.convert_cna_grouped(
         spark, str(root), str(out), with_derived=True
+    ) == 1
+    assert pipelines.convert_mutations_grouped_salvage(
+        spark, str(root), str(out)
     ).ok
-    assert pipelines.convert_mutations(spark, str(root), str(out)).ok
     # a combined duplicate that must NOT be loaded
     pipelines.combine_cna(spark, str(out), with_derived=True)
 

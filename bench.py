@@ -604,17 +604,17 @@ def main() -> None:
     # resident) — compare like with like across rounds, not start-vs-end
     calibration["end_jvm_live"] = _calibrate()
     total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_dir,
-            }
-        )
-    )
+    line = {
+        "metric": "headline_queries_wall_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf_dir,
+    }
+    if only is not None:
+        # a targeted run writes no artifact: its vector is this line
+        line["host_calibration_sec"] = calibration
+    print(json.dumps(line))
     # The driver's artifact keeps only the last ~2.2 KB of output; with
     # ~100 queries the full line above exceeds that and its HEAD (the
     # metric + total) is what gets truncated away. Two mitigations:

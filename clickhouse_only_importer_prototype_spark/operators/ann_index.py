@@ -7,9 +7,9 @@ implies are a full corpus scan each — none of which belongs on the
 query path. This module splits the lifecycle the way a production
 vector store does:
 
-  * ``build_ann_index``  — ONE training pass (deterministic, seeded;
-    the same sliver-sized Lloyd as the in-session path) plus ONE full
-    corpus encode scan, persisted as a parquet artifact;
+  * ``build_ann_index``  — ONE training pass (``similarity.train_ann``,
+    the trainer of the in-session kernel) plus ONE full corpus encode
+    scan, persisted as a parquet artifact;
   * ``load_ann_index``   — driver-side metadata read (centroids and
     codebooks are KB-scale; pyarrow, no Spark job) + a lazy handle on
     the distributed codes table;
@@ -64,8 +64,7 @@ from clickhouse_only_importer_prototype_spark.operators.similarity import (
     _as_double,
     _ivf_probe_udf,
     _pq_encode_udf,
-    ivf_train_centroids,
-    pq_train_codebooks,
+    train_ann,
 )
 
 FORMAT_VERSION = 1
@@ -180,10 +179,10 @@ def _encoded_frame(
     """(vec_id, cluster, codes) for ``df`` against FROZEN parameters —
     ONE scan computes whichever of cell/codes the kind needs (two
     Arrow UDFs over the same projection; a join of separate assign +
-    encode passes measured 33.6s at 2M vectors — the same scan-side
-    fusion as cosine_topk_ivfpq). The encoder is ``_pq_encode_udf``,
-    the single implementation shared with the in-session path, so
-    stored and in-session codes are bit-identical by construction."""
+    encode passes measured 33.6s at 2M vectors). Both UDFs run the
+    numpy kernels the in-session candidate pass runs
+    (``similarity._probe_cells``/``_pq_codes``), so stored and
+    in-session cells and codes are bit-identical by construction."""
     cols = [F.col(id_col).cast("long").alias("vec_id")]
     if centroids is not None:
         assign = _ivf_probe_udf(centroids, 1)
@@ -225,20 +224,13 @@ def build_ann_index(
         n_codes = 16 if kind == "pq" else 32
     if pq_iters is None:
         pq_iters = 3 if kind == "pq" else iters
-    centroids = (
-        ivf_train_centroids(
-            corpus, dim, n_centroids, iters, seed, id_col, vec_col
-        )
-        if kind in ("ivf", "ivfpq")
-        else None
-    )
-    codebooks = (
-        pq_train_codebooks(
-            corpus, dim, m, n_codes, pq_iters, seed, id_col, vec_col
-        )
-        if kind in ("pq", "ivfpq")
-        else None
-    )
+    coarse = [(n_centroids, iters, None)] if kind in ("ivf", "ivfpq") else []
+    pq = [(m, n_codes, pq_iters)] if kind in ("pq", "ivfpq") else []
+    # the same trainer (and, for ivfpq, the same single sliver collect)
+    # as the in-session kernel, so a default build serves bit-identically
+    cents, books = train_ann(corpus, dim, coarse, pq, seed, id_col, vec_col)
+    centroids = cents[coarse[0]] if coarse else None
+    codebooks = books[pq[0]] if pq else None
     _write_meta_tables(
         path,
         kind,

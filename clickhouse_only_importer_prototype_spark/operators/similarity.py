@@ -1,49 +1,66 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, matching the 100 TB playbook:
-  * Brute-force cosine top-k — the correctness baseline. Broadcast the
-    (small) query set against the corpus scan: one pass, no shuffle of
-    the corpus, a per-query top-k window on the (queries × corpus)
-    product. Dot products run JVM-side via ``aggregate``/``zip_with``
-    over double arrays — deterministic left-to-right accumulation that
-    DuckDB's list_inner_product reproduces exactly.
-  * LSH-bucketed ANN (signed random projections) — the scale path.
-    Plane matrix is derived deterministically from a seed (driver-side
-    numpy, broadcast as literals); bucket signature per table via
-    arrow-vectorized pandas UDF (numpy matmul); candidates = bucket
-    collisions in any table, re-ranked exactly. Corpus shuffles once
-    per table on bucket id; no O(n²) stage anywhere.
+Brute-force cosine top-k is the correctness baseline: the (small)
+query set is broadcast against the corpus scan, dot products run
+JVM-side as one ``aggregate``/``zip_with`` fold over double arrays —
+deterministic left-to-right accumulation that DuckDB's
+list_inner_product reproduces exactly — and a per-query window keeps
+the top k.
 
-Two trained variants extend the surface: IVF (spherical k-means
-centroids + nprobe candidate lists) and PQ (per-subspace codebooks,
-ADC candidate scan over codes only + exact shortlist rescore — the
-compressed-storage path). SRP-LSH remains the no-training-pass option.
+Four approximate variants trade recall for pruning: SRP-LSH (seeded
+random planes, no training), IVF (spherical k-means cells, nprobe
+probed per query), PQ (per-subspace codebooks, ADC shortlist over
+codes only) and IVF-PQ (both). One kernel, ``ann_topk``, serves any
+set of them from one value trained per call:
+  * training — one collect of the widest xxhash training sliver; each
+    coarse k-means and codebook set takes its own sliver from it on
+    the driver (``train_ann``); a prebuilt ``ann_index`` artifact
+    supplies the same value without training;
+  * queries — one collect; probe cells, LSH buckets and PQ lookup
+    tables are computed on the driver;
+  * candidates — one fused ``mapInPandas`` pass over the corpus (and
+    any prebuilt codes table) emits tagged (variant, query, neighbor,
+    adc) rows for every variant, then one shortlist window for the ADC
+    variants;
+  * one exact rescore and top-k window partitioned by (variant,
+    query_id), the same tail brute force uses.
+The single-variant functions (``cosine_topk_ivf`` ...) are the kernel
+with one variant. Nothing is persisted between calls.
 """
 
 from __future__ import annotations
+
+import math
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, FloatType, LongType
 
 DEFAULT_SEED = 42
 
 
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product over array<double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot(a: str, b: str) -> Column:
+    """JVM-side dot product of two array<double> SQL expressions (column
+    names or expressions). One SQL string is one parse on the JVM, where
+    the lambda form costs a py4j round-trip per sub-expression."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+        "(acc, x) -> acc + x)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+def norm(a: str) -> Column:
+    return F.expr(f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))")
+
+
+def _cos_1e6(a: str, b: str) -> Column:
+    """floor(1e6 * cos(a, b)) as long — the exact score of every cosine
+    output, hashed identically by the DuckDB oracles."""
+    cos = dot(a, b) / (norm(a) * norm(b))
+    return F.floor(cos * F.lit(1000000.0)).cast("long")
 
 
 def _as_double(col: str | Column) -> Column:
@@ -103,6 +120,38 @@ def quantize_embeddings(
     )
 
 
+def _topk(
+    pairs: DataFrame, k: int, keys: tuple[str, ...] = ("query_id",)
+) -> DataFrame:
+    """The exact tail every cosine top-k shares: score (keys...,
+    neighbor_id, qv, cv) pairs with ``_cos_1e6`` and keep the top k per
+    ``keys`` (ties break on neighbor id) -> (keys..., neighbor_id,
+    rank, cos_1e6)."""
+    scored = pairs.select(
+        *keys, "neighbor_id", _cos_1e6("qv", "cv").alias("cos_1e6")
+    )
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("cos_1e6").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select(*keys, "neighbor_id", "rank", "cos_1e6")
+    )
+
+
+def _query_vectors(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+    )
+
+
+def _corpus_vectors(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+    )
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -118,32 +167,12 @@ def cosine_topk_bruteforce(
     Scores are emitted as int64 micro-units (floor(cos * 1e6)) so the
     DuckDB oracle hashes identically; ties break on neighbor id.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
-    scored = (
-        c.join(F.broadcast(q))
+    pairs = (
+        _corpus_vectors(corpus, id_col, vec_col)
+        .join(F.broadcast(_query_vectors(queries, id_col, vec_col)))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
+    return _topk(pairs, k)
 
 
 def srp_planes(dim: int, n_planes: int, table: int, seed: int = DEFAULT_SEED) -> np.ndarray:
@@ -152,114 +181,35 @@ def srp_planes(dim: int, n_planes: int, table: int, seed: int = DEFAULT_SEED) ->
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def _srp_all_buckets_udf(planes: np.ndarray):
-    """One UDF computing every table's bucket in a single matmul.
-
-    ``planes`` is (tables, n_planes, dim); the batch matmul against the
-    flattened (tables*n_planes, dim) matrix touches each vector once —
-    one Arrow round-trip per batch instead of one per table.
-    """
-    n_tables, n_planes, _ = planes.shape
-    flat = planes.reshape(n_tables * n_planes, -1)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        bits = (mat @ flat.T > 0).reshape(len(mat), n_tables, n_planes)
-        vals = bits.astype(np.int64) @ weights  # (batch, tables)
-        return pd.Series(list(vals))
-
-    return buckets
-
-
-def srp_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = DEFAULT_SEED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, table, bucket) — one row per LSH table per vector.
-
-    Single scan + single vectorized UDF for all tables, then a
-    posexplode (narrow) — no union of per-table subplans.
-    """
-    planes = np.stack(
-        [srp_planes(dim, n_planes, t, seed) for t in range(n_tables)]
-    )
-    udf = _srp_all_buckets_udf(planes)
-    return df.select(
-        F.col(id_col).alias("vec_id"), udf(F.col(vec_col)).alias("__bs")
-    ).select("vec_id", F.posexplode("__bs").alias("table", "bucket"))
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = DEFAULT_SEED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k via SRP-LSH candidate generation.
-
-    Candidates = (query, corpus) pairs colliding in >=1 table; exact
-    cosine re-rank on candidates only. Recall rises with n_tables and
-    falls with n_planes; 12 planes × 4 tables gives ~90%+ recall@5 on
-    random 64-dim data while pruning most of the corpus per query.
-    """
-    cb = srp_buckets(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
-    qb = srp_buckets(queries, dim, n_planes, n_tables, seed, id_col, vec_col)
-    cands = (
-        cb.alias("c")
-        .join(
-            qb.alias("q"),
-            (F.col("c.table") == F.col("q.table"))
-            & (F.col("c.bucket") == F.col("q.bucket"))
-            & (F.col("c.vec_id") != F.col("q.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-        )
-        .distinct()
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (norm(F.col("qv")) * norm(F.col("cv")))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
-
-
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return mat / norms
+
+
+# The numpy kernels below are the ONE implementation of each per-vector
+# computation: the Arrow UDFs (index build, incremental encode), the
+# fused candidate pass and the driver-side query state all call them,
+# so stored, in-session and query-side values agree bit for bit. They
+# take the stored vector dtype (float32 here) as the UDFs receive it.
+
+
+def _probe_cells(
+    mat: np.ndarray, cents: np.ndarray, nprobe: int
+) -> np.ndarray:
+    """(rows, nprobe) ids of the nearest row-normalized centroids; the
+    stable sort on -sim breaks ties on centroid id."""
+    sims = _normalize_rows(mat.astype(np.float64)) @ cents.T
+    return np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+
+
+def _srp_codes(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(rows, tables) SRP bucket ids for ``planes`` (tables, n_planes,
+    dim): one matmul against every table's planes at once."""
+    n_tables, n_planes, _ = planes.shape
+    flat = planes.reshape(n_tables * n_planes, -1)
+    bits = (mat @ flat.T > 0).reshape(len(mat), n_tables, n_planes)
+    return bits.astype(np.int64) @ (1 << np.arange(n_planes, dtype=np.int64))
 
 
 def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
@@ -268,13 +218,96 @@ def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
 
     @pandas_udf(ArrayType(LongType()))
     def probes(vecs: pd.Series) -> pd.Series:
-        mat = _normalize_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-        sims = mat @ centroids.T  # (batch, C)
-        # stable sort on -sim => ties break on centroid id, deterministic
-        order = np.argsort(-sims, axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int64)))
+        return pd.Series(
+            list(_probe_cells(np.stack(vecs.to_numpy()), centroids, nprobe))
+        )
 
     return probes
+
+
+def _sliver(
+    df: DataFrame, bound: int, seed: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The deterministic training sliver: rows whose xxhash64(seed+1, id)
+    draw ``s`` falls under ``bound`` (of 2^30) — stable across
+    partitionings and retries, unlike ``df.sample`` — with ``h``, the
+    init-order hash."""
+    s = F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
+    return df.where(s < bound).select(
+        F.col(id_col).alias("i"),
+        _as_double(vec_col).alias("v"),
+        F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
+        s.alias("s"),
+    )
+
+
+def _sliver_bound(fraction: float) -> int:
+    return int(fraction * (1 << 30)) if fraction < 1.0 else 1 << 30
+
+
+def train_ann(
+    df: DataFrame,
+    dim: int,
+    coarse=(),
+    pq=(),
+    seed: int = DEFAULT_SEED,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_rows: int | None = None,
+    train_points_per_centroid: int = 256,
+) -> tuple[dict, dict]:
+    """Train every requested coarse k-means and PQ codebook set from ONE
+    collect: ``coarse`` holds (n_centroids, iters, train_fraction) keys,
+    ``pq`` holds (m, n_codes, iters) keys; returns ({key: centroids},
+    {key: codebooks}).
+
+    Sizing: quality needs ~100-1000 points per centroid, not the
+    corpus, so each trainer reads a sliver of ``n_centroids`` (or
+    ``n_codes``) x ``train_points_per_centroid`` rows (an explicit
+    ``train_fraction`` overrides a coarse one). Slivers are nested
+    thresholds of one xxhash draw: the widest is collected once and
+    each trainer keeps its own rows on the driver. A coarse sliver too
+    large for the driver (explicit fractions only) trains distributed.
+
+    ``n_rows``: exact row count of ``df`` when the caller knows it
+    (parquet footer of an unfiltered scan) — skips the count job. It
+    sizes the slivers, so it must be exact or None.
+    """
+    for _, _, frac in coarse:
+        if frac is not None and not 0.0 < frac <= 1.0:
+            raise ValueError(f"train_fraction must be in (0, 1]: {frac}")
+    for m, _, _ in pq:
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m {m}")
+    cents: dict = {}
+    books: dict = {}
+    if not coarse and not pq:
+        return cents, books
+    n = df.count() if n_rows is None else n_rows
+    bounds = {}
+    for key in coarse:
+        n_cent, iters, frac = key
+        target = n_cent * train_points_per_centroid
+        if frac is None:
+            frac = 1.0 if n <= target else target / n
+        if int(frac * n) > max(4 * target, 65536):
+            train = _sliver(df, _sliver_bound(frac), seed, id_col, vec_col)
+            cents[key] = _lloyd_distributed(train, dim, n_cent, iters)
+        else:
+            bounds[("coarse", key)] = _sliver_bound(frac)
+    for key in pq:
+        target = key[1] * train_points_per_centroid
+        bounds[("pq", key)] = _sliver_bound(1.0 if n <= target else target / n)
+    if bounds:
+        widest = max(bounds.values())
+        rows = _sliver(df, widest, seed, id_col, vec_col).collect()
+        for (what, key), bound in bounds.items():
+            sub = [r for r in rows if r["s"] < bound]
+            if what == "coarse":
+                cents[key] = _lloyd_driver(sub, dim, key[0], key[1])
+            else:
+                books[key] = _pq_codebooks(sub, dim, *key)
+    return cents, books
 
 
 def ivf_train_centroids(
@@ -289,58 +322,18 @@ def ivf_train_centroids(
     train_points_per_centroid: int = 256,
     n_rows: int | None = None,
 ) -> np.ndarray:
-    """Spherical k-means centroids, trained distributed.
-
-    ``n_rows``: exact row count of ``df``, when the caller already
-    knows it (e.g. from the parquet footer of an unfiltered table
-    scan) — skips the count job. Used ONLY for training-sliver sizing
-    and the driver/distributed Lloyd crossover; a wrong value changes
-    the training sliver and therefore the centroids, so callers must
-    pass the exact count or nothing (r12, guide §1.2 step 1: the count
-    job was pure fixed overhead on every ANN query).
+    """Spherical k-means centroids (n_centroids, dim), row-normalized.
 
     Init is a deterministic pseudo-random sample (the n_centroids rows
     with smallest xxhash64(seed, id) — no RNG state, stable across
-    partitionings). Each Lloyd iteration is one assignment pass (arrow
-    UDF matmul) + one (cluster, dim-position) sum/count aggregation;
-    only C×dim cells ever reach the driver, regardless of corpus size.
-
-    Training-set sizing: centroid quality needs ~100-1000 points per
-    centroid, not the corpus — at 100 TB you train on a sliver and
-    assign the full corpus once. When ``train_fraction`` is None the
-    sliver is auto-sized to ``n_centroids * train_points_per_centroid``
-    points (one metadata-cheap count picks the fraction); an explicit
-    fraction overrides. Either way the subsample is a deterministic
-    xxhash64 threshold (stable across partitionings/retries — not
-    ``df.sample``, whose output depends on partitioning), and the
-    sliver is persisted so init + every Lloyd pass reuse one scan
-    instead of re-reading the corpus per iteration.
-    """
-    if train_fraction is not None and not 0.0 < train_fraction <= 1.0:
-        raise ValueError(f"train_fraction must be in (0, 1]: {train_fraction}")
-    # parquet count(*) is metadata-only under Spark's row-count
-    # optimization; at worst it is a column-pruned id scan
-    n = df.count() if n_rows is None else n_rows
-    target = n_centroids * train_points_per_centroid
-    if train_fraction is None:
-        train_fraction = 1.0 if n <= target else target / n
-    if train_fraction < 1.0:
-        bound = int(train_fraction * (1 << 30))
-        df = df.where(
-            F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
-            < bound
-        )
-    train = df.select(
-        F.col(id_col).alias("i"),
-        _as_double(vec_col).alias("v"),
-        F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
-    )
-    n_train_est = int(train_fraction * n)
-    if n_train_est <= max(4 * target, 65536):
-        return _lloyd_driver(
-            train.collect(), dim, n_centroids, iters
-        )
-    return _lloyd_distributed(train, dim, n_centroids, iters)
+    partitionings); training-sliver sizing and ``n_rows`` as in
+    ``train_ann``. Only C×dim cells ever leave the training step,
+    whatever the corpus size."""
+    key = (n_centroids, iters, train_fraction)
+    return train_ann(
+        df, dim, coarse=[key], seed=seed, id_col=id_col, vec_col=vec_col,
+        n_rows=n_rows, train_points_per_centroid=train_points_per_centroid,
+    )[0][key]
 
 
 def _lloyd_driver(
@@ -425,118 +418,6 @@ def _lloyd_distributed(
     return cents
 
 
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    seed: int = DEFAULT_SEED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_fraction: float | None = None,
-    prebuilt=None,
-    cents: np.ndarray | None = None,
-    corpus_rows: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via an IVF (inverted-file) index.
-
-    ``corpus_rows``: exact row count of ``corpus`` when the caller
-    already knows it (parquet footer of an unfiltered scan) — forwarded
-    to the trainer so the sizing count job is skipped (see
-    ``ivf_train_centroids``).
-
-    The corpus partitions into n_centroids Voronoi cells (one cluster
-    id per vector — the 'inverted lists'); each query probes its nprobe
-    nearest cells and reranks exactly within them. Versus SRP-LSH this
-    adapts to the data distribution (trained centroids) at the cost of
-    a training pass. At 100 TB the assignment output would be written
-    bucketed by cluster so the probe join is co-located and prunes to
-    nprobe/n_centroids of the data per query.
-
-    ``prebuilt`` (an ``ann_index.AnnIndex``) switches to the
-    train-once / serve-many posture: centroids load from the artifact
-    (no training job) and cell assignments come from the persisted
-    codes table (no assignment scan of raw vectors) — raw vectors are
-    only read for the exact within-cell rerank. Results are
-    bit-identical to the in-session path with matching parameters
-    (training is seeded/partition-stable and float64 survives parquet
-    exactly; pinned by tests/test_ann_index.py).
-
-    ``cents`` (consulted only when ``prebuilt`` is None) injects
-    pre-trained coarse centroids: callers evaluating several variants
-    over the SAME corpus with the SAME training params (n_centroids,
-    iters, seed, train_fraction) train once via ``ivf_train_centroids``
-    and share the array — training is deterministic, so the result is
-    bit-identical to retraining here (pinned by
-    tests/test_similarity_shared_training.py); r12 optimization, guide
-    §2.4: the duplicate count+collect training jobs are removed
-    outright."""
-    if prebuilt is not None:
-        _check_prebuilt_dim(prebuilt, dim)
-        if prebuilt.centroids is None:
-            raise ValueError(f"index kind {prebuilt.kind!r} has no centroids")
-        cents = prebuilt.centroids
-        cells = prebuilt.codes(corpus.sparkSession).select(
-            F.col("vec_id").alias("neighbor_id"), "cluster"
-        )
-        # static partition prune on the cluster-partitioned codes
-        # table: the probed-cell union is computable driver-side from
-        # the (small, serving-contract) query set before any scan
-        # plans — one tiny job, and the cells scan reads only
-        # nprobe/n_centroids of the files. The raw-vector side is not
-        # cluster-partitioned here; at 100 TB the corpus would be
-        # co-bucketed by cell so the rerank join prunes the same way.
-        probed = queries.select(
-            _ivf_probe_udf(cents, nprobe)(F.col(vec_col)).alias("cs")
-        ).collect()
-        needed = sorted({cell for r in probed for cell in r["cs"]})
-        if needed:
-            cells = cells.where(F.col("cluster").isin(needed))
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-        ).join(cells, "neighbor_id")
-    else:
-        if cents is None:
-            cents = ivf_train_centroids(
-                corpus, dim, n_centroids, iters, seed, id_col, vec_col,
-                train_fraction, n_rows=corpus_rows,
-            )
-        assign = _ivf_probe_udf(cents, 1)
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-            assign(F.col(vec_col))[0].alias("cluster"),
-        )
-    probe = _ivf_probe_udf(cents, nprobe)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        F.explode(probe(F.col(vec_col))).alias("cluster"),
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (norm(F.col("qv")) * norm(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(q), "cluster")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
-    )
-
-
 #: Minimum exact-duplicate fraction at which the embedding
 #: representative collapse pays for its groupBy + expansion joins —
 #: the same measured break-even philosophy as the text family's
@@ -600,9 +481,8 @@ def _self_cos_1e6(vec_col: str) -> Column:
     member vectors must reproduce the uncollapsed path's value bit-
     for-bit, including the ~1ulp-below-1.0 cases where float rounding
     makes cos(v,v) floor to 999999."""
-    v = _as_double(vec_col)
-    cos = dot(v, v) / (norm(v) * norm(v))
-    return F.floor(cos * F.lit(1000000.0)).cast("long")
+    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    return _cos_1e6(v, v)
 
 
 def embedding_neardup_pairs(
@@ -758,16 +638,75 @@ def embedding_neardup_pairs(
     cands = pairs.mapInPandas(scan, "doc_a long, doc_b long")
     a = df.select(F.col(id_col).alias("doc_a"), _as_double(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("doc_b"), _as_double(vec_col).alias("vb"))
-    cos = dot(F.col("va"), F.col("vb")) / (norm(F.col("va")) * norm(F.col("vb")))
     return (
         cands.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
+        .select("doc_a", "doc_b", _cos_1e6("va", "vb").alias("cos_1e6"))
         .where(F.col("cos_1e6") >= threshold_1e6)
+    )
+
+
+def _one_row_per(agg: DataFrame, rows: list[dict[str, Column]]) -> DataFrame:
+    """Unfold a one-row aggregate into one output row per entry of
+    ``rows`` (field name -> Column over ``agg``), in order — so every
+    requested variant gets its row even when it matched nothing."""
+    structs = [F.struct(*[c.alias(n) for n, c in r.items()]) for r in rows]
+    exploded = F.explode(F.array(*structs)).alias("__r")
+    return agg.select(exploded).select("__r.*")
+
+
+def _hits(truth: DataFrame, approx: DataFrame, *cols: str) -> DataFrame:
+    """The approximate rows (variant, query_id, neighbor_id, *cols)
+    whose pair is in the exact top-k — a semi join, so a truth pair
+    never duplicates an approximate row. Each variant's top-k holds a
+    pair at most once, so per-variant counts equal the truth pairs
+    recovered."""
+    return approx.select("variant", "query_id", "neighbor_id", *cols).join(
+        truth.select("query_id", "neighbor_id"),
+        ["query_id", "neighbor_id"],
+        "left_semi",
+    )
+
+
+def topk_recall_floors(
+    truth: DataFrame, approx: DataFrame, floors: dict[str, int]
+) -> DataFrame:
+    """In-engine recall audit of approximate top-k rows (tagged by a
+    ``variant`` column) against the exact one: one row (variant,
+    truth_pairs, meets_floor) per entry of ``floors`` (variant ->
+    recall floor per 1000), from one semi join and one aggregate.
+
+    ``meets_floor`` folds each variant's recall into a value that is
+    STABLE across scale factors (the exact recall number is
+    corpus-dependent; whether it clears a pinned floor is not), so the
+    audit is oracle-able: a SQL twin recomputes ``truth_pairs`` from
+    the deterministic brute-force contract (k rows per query) and
+    expects ``meets_floor`` true. Recall regression in an approximate
+    path then fails the hard correctness gate, not just a local test.
+    """
+    names = list(floors)
+    hits = _hits(truth, approx).agg(
+        *[
+            F.count(F.when(F.col("variant") == v, 1)).alias(f"h{i}")
+            for i, v in enumerate(names)
+        ]
+    )
+    total = truth.agg(F.count(F.lit(1)).cast("long").alias("truth_pairs"))
+
+    def meets(i: int, floor_per_1000: int) -> Column:
+        recall = F.lit(1000.0) * F.col(f"h{i}") / F.col("truth_pairs")
+        return F.floor(recall) >= F.lit(floor_per_1000)
+
+    return _one_row_per(
+        hits.crossJoin(total),
+        [
+            {
+                "variant": F.lit(v),
+                "truth_pairs": F.col("truth_pairs"),
+                "meets_floor": meets(i, floors[v]),
+            }
+            for i, v in enumerate(names)
+        ],
     )
 
 
@@ -777,32 +716,13 @@ def topk_recall(
     variant: str,
     floor_per_1000: int,
 ) -> DataFrame:
-    """In-engine recall audit of an approximate top-k against the exact
-    one: one row (variant, truth_pairs, meets_floor).
-
-    ``meets_floor`` folds the approximate side's recall into a value
-    that is STABLE across scale factors (the exact recall number is
-    corpus-dependent; whether it clears a pinned floor is not), so the
-    audit is oracle-able: a SQL twin recomputes ``truth_pairs`` from
-    the deterministic brute-force contract (k rows per query) and
-    expects ``meets_floor`` true. Recall regression in the LSH/IVF
-    path then fails the hard correctness gate, not just a local test.
-    """
-    t = truth.select("query_id", "neighbor_id")
-    hits = t.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    ).agg(F.count("*").alias("hits"))
-    total = t.agg(F.count("*").alias("total"))
-    return hits.crossJoin(total).select(
-        F.lit(variant).alias("variant"),
-        F.col("total").cast("long").alias("truth_pairs"),
-        (
-            F.floor(F.lit(1000.0) * F.col("hits") / F.col("total"))
-            >= F.lit(floor_per_1000)
-        ).alias("meets_floor"),
+    """``topk_recall_floors`` for one untagged approximate top-k."""
+    return topk_recall_floors(
+        truth, approx.withColumn("variant", F.lit(variant)),
+        {variant: floor_per_1000},
     )
+
+
 
 
 def kmeans_assign_int(
@@ -1049,7 +969,6 @@ def grouped_neardup_pairs(
     cands = blocked.mapInPandas(scan, "doc_a long, doc_b long, grp long")
     a = df.select(F.col(id_col).alias("doc_a"), _as_double(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("doc_b"), _as_double(vec_col).alias("vb"))
-    cos = dot(F.col("va"), F.col("vb")) / (norm(F.col("va")) * norm(F.col("vb")))
     return (
         cands.join(a, "doc_a")
         .join(b, "doc_b")
@@ -1057,9 +976,78 @@ def grouped_neardup_pairs(
             "doc_a",
             "doc_b",
             F.col("grp"),
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
+            _cos_1e6("va", "vb").alias("cos_1e6"),
         )
         .where(F.col("cos_1e6") >= threshold_1e6)
+    )
+
+
+def topk_ranking_floors(
+    truth: DataFrame,
+    approx: DataFrame,
+    k: int,
+    floors: dict[str, tuple[int, int]],
+) -> DataFrame:
+    """Rank-AWARE audit of approximate top-k rows (tagged by a
+    ``variant`` column) against the exact one: one row (variant,
+    n_queries, meets_mrr_floor, meets_ndcg_floor) per entry of
+    ``floors`` (variant -> (MRR, NDCG) floors per 1000). Complements
+    ``topk_recall_floors`` (set overlap): MRR scores WHERE the first
+    true neighbor lands in the approximate ranking, binary-relevance
+    NDCG@k scores the whole list's ordering.
+
+    Exactness: reciprocal ranks and DCG discounts are integer
+    constants (floor(1e6/rank), floor(1e6/log2(i+1)) literals), means
+    are integer divisions over every truth query (a query with no hit
+    scores 0) — so the floor comparisons are drift-free and, like the
+    recall audit, oracle-able as pinned booleans that fail the hard
+    gate if ranking quality regresses.
+
+    Scale: hits = one semi join on (nq x k) frames; everything
+    downstream is (variant, query)-keyed aggregation over nq rows.
+    """
+    weights = [int(1_000_000 // math.log2(i + 1)) for i in range(1, k + 1)]
+    idcg = sum(weights)
+    w_arr = F.array([F.lit(w) for w in weights])
+    names = list(floors)
+    per_q = (
+        _hits(truth, approx, "rank")
+        .groupBy("variant", "query_id")
+        .agg(
+            F.min("rank").alias("first_rank"),
+            F.sum(F.element_at(w_arr, F.col("rank").cast("int"))).alias("dcg"),
+        )
+        .select(
+            "variant",
+            F.expr("div(1000000, first_rank)").alias("rr"),
+            F.expr(f"div(dcg * 1000000, {idcg})").alias("ndcg"),
+        )
+    )
+    sums = per_q.agg(
+        *[
+            F.coalesce(
+                F.sum(F.when(F.col("variant") == v, F.col(c))), F.lit(0)
+            ).alias(f"{c}{i}")
+            for i, v in enumerate(names)
+            for c in ("rr", "ndcg")
+        ]
+    )
+    nq = truth.agg(F.countDistinct("query_id").alias("n_queries"))
+
+    def meets(col: str, floor_per_1000: int) -> Column:
+        return F.expr(f"div({col}, n_queries)") >= F.lit(floor_per_1000 * 1000)
+
+    return _one_row_per(
+        sums.crossJoin(nq),
+        [
+            {
+                "variant": F.lit(v),
+                "n_queries": F.col("n_queries").cast("long"),
+                "meets_mrr_floor": meets(f"rr{i}", floors[v][0]),
+                "meets_ndcg_floor": meets(f"ndcg{i}", floors[v][1]),
+            }
+            for i, v in enumerate(names)
+        ],
     )
 
 
@@ -1071,55 +1059,10 @@ def topk_ranking_quality(
     mrr_floor_per_1000: int,
     ndcg_floor_per_1000: int,
 ) -> DataFrame:
-    """Rank-AWARE audit of an approximate top-k against the exact one:
-    one row (variant, n_queries, meets_mrr_floor, meets_ndcg_floor).
-    Complements ``topk_recall`` (set overlap): MRR scores WHERE the
-    first true neighbor lands in the approximate ranking, binary-
-    relevance NDCG@k scores the whole list's ordering.
-
-    Exactness: reciprocal ranks and DCG discounts are integer
-    constants (floor(1e6/rank), floor(1e6/log2(i+1)) literals), means
-    are integer divisions — so the floor comparisons are drift-free
-    and, like the recall audit, oracle-able as pinned booleans that
-    fail the hard gate if ranking quality regresses.
-
-    Scale: hits = one broadcastable semi join on (nq x k) frames;
-    everything downstream is query-keyed aggregation over nq rows.
-    """
-    import math
-
-    weights = [int(1_000_000 // math.log2(i + 1)) for i in range(1, k + 1)]
-    idcg = sum(weights)
-    w_arr = F.array([F.lit(w) for w in weights])
-
-    t = truth.select("query_id", "neighbor_id")
-    qs = t.select("query_id").distinct()
-    hits = approx.select("query_id", "neighbor_id", "rank").join(
-        t, ["query_id", "neighbor_id"], "left_semi"
-    )
-    per_q = hits.groupBy("query_id").agg(
-        F.min("rank").alias("first_rank"),
-        F.sum(F.element_at(w_arr, F.col("rank").cast("int"))).alias("dcg"),
-    )
-    scored = qs.join(per_q, "query_id", "left").select(
-        F.coalesce(F.expr("div(1000000, first_rank)"), F.lit(0)).alias("rr"),
-        F.coalesce(
-            F.expr(f"div(dcg * 1000000, {idcg})"), F.lit(0)
-        ).alias("ndcg"),
-    )
-    return scored.agg(
-        F.count("*").alias("nq"),
-        F.sum("rr").alias("srr"),
-        F.sum("ndcg").alias("sndcg"),
-    ).select(
-        F.lit(variant).alias("variant"),
-        F.col("nq").cast("long").alias("n_queries"),
-        (
-            F.expr("div(srr, nq)") >= F.lit(mrr_floor_per_1000 * 1000)
-        ).alias("meets_mrr_floor"),
-        (
-            F.expr("div(sndcg, nq)") >= F.lit(ndcg_floor_per_1000 * 1000)
-        ).alias("meets_ndcg_floor"),
+    """``topk_ranking_floors`` for one untagged approximate top-k."""
+    return topk_ranking_floors(
+        truth, approx.withColumn("variant", F.lit(variant)), k,
+        {variant: (mrr_floor_per_1000, ndcg_floor_per_1000)},
     )
 
 
@@ -1133,6 +1076,15 @@ def topk_ranking_quality(
 # ---------------------------------------------------------------------------
 
 
+def _sq_dists(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(rows, centroids) squared L2 distances, expanded form."""
+    return (
+        (x * x).sum(axis=1, keepdims=True)
+        - 2.0 * (x @ cents.T)
+        + (cents * cents).sum(axis=1)
+    )
+
+
 def _plain_lloyd(mat: np.ndarray, k: int, iters: int) -> np.ndarray:
     """Plain L2 Lloyd over a driver-resident training sliver. Unlike
     _lloyd_driver this does NOT normalize between iterations — PQ
@@ -1143,11 +1095,7 @@ def _plain_lloyd(mat: np.ndarray, k: int, iters: int) -> np.ndarray:
     argsort tie-break; empty clusters keep their centroid."""
     cents = mat[:k].copy()
     for _ in range(iters):
-        d2 = (
-            (mat * mat).sum(axis=1, keepdims=True)
-            - 2.0 * (mat @ cents.T)
-            + (cents * cents).sum(axis=1)
-        )
+        d2 = _sq_dists(mat, cents)
         clusters = np.argsort(d2, axis=1, kind="stable")[:, 0]
         new = cents.copy()
         for c in range(k):
@@ -1156,6 +1104,30 @@ def _plain_lloyd(mat: np.ndarray, k: int, iters: int) -> np.ndarray:
                 new[c] = members.mean(axis=0)
         cents = new
     return cents
+
+
+def _pq_codebooks(
+    rows: list, dim: int, m: int, n_codes: int, iters: int
+) -> np.ndarray:
+    """Per-subspace codebooks from a collected training sliver (rows of
+    i, v, h): vectors are ordered by the xxhash draw (init = first
+    n_codes rows, stable across partitionings because it keys on
+    values, not arrival order) and unit-normalized before slicing."""
+    if len(rows) < n_codes:
+        raise ValueError(
+            f"need >= {n_codes} training vectors, got {len(rows)}"
+        )
+    rows = sorted(rows, key=lambda r: (r["h"], r["i"]))
+    mat = _normalize_rows(
+        np.array([r["v"] for r in rows], dtype=np.float64)
+    )
+    dsub = dim // m
+    return np.stack(
+        [
+            _plain_lloyd(mat[:, j * dsub : (j + 1) * dsub], n_codes, iters)
+            for j in range(m)
+        ]
+    )
 
 
 def pq_train_codebooks(
@@ -1173,79 +1145,50 @@ def pq_train_codebooks(
     """Per-subspace L2 codebooks over NORMALIZED vectors ->
     (m, n_codes, dim//m). Vectors are unit-normalized before slicing so
     ADC L2 ranking is monotone with cosine (the corpus truth metric).
+    Training sliver and ``n_rows`` as in ``train_ann``: at most
+    n_codes x train_points_per_centroid rows (~1 MB at the defaults)
+    reach the driver, whatever the corpus size."""
+    key = (m, n_codes, iters)
+    return train_ann(
+        df, dim, pq=[key], seed=seed, id_col=id_col, vec_col=vec_col,
+        n_rows=n_rows, train_points_per_centroid=train_points_per_centroid,
+    )[1][key]
 
-    Training follows the ivf_train_centroids sizing rule: codebook
-    quality needs ~100s of points per centroid, not the corpus, so a
-    deterministic xxhash sliver (stable across partitionings) is
-    collected driver-side — bounded at n_codes x train_points_per_
-    centroid rows (~1 MB at the defaults) regardless of corpus size;
-    the full corpus is only ever touched by the one encode pass."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    # n_rows: caller-known exact count (same contract and rationale as
-    # ivf_train_centroids.n_rows)
-    n = df.count() if n_rows is None else n_rows
-    target = n_codes * train_points_per_centroid
-    frac = 1.0 if n <= target else target / n
-    src = df
-    if frac < 1.0:
-        bound = int(frac * (1 << 30))
-        src = df.where(
-            F.pmod(F.xxhash64(F.lit(seed + 1), F.col(id_col)), F.lit(1 << 30))
-            < bound
-        )
-    rows = (
-        src.select(
-            F.col(id_col).alias("i"),
-            _as_double(vec_col).alias("v"),
-            F.xxhash64(F.lit(seed), F.col(id_col)).alias("h"),
-        )
-        .collect()
-    )
-    if len(rows) < n_codes:
-        raise ValueError(
-            f"need >= {n_codes} training vectors, got {len(rows)}"
-        )
-    # deterministic pseudo-random order for init; stable across
-    # partitionings because it keys on values, not arrival order
-    rows = sorted(rows, key=lambda r: (r["h"], r["i"]))
-    mat = _normalize_rows(
-        np.array([r["v"] for r in rows], dtype=np.float64)
-    )
-    dsub = dim // m
+
+def _pq_codes(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(rows, m) nearest codebook entry per subspace of the normalized
+    vectors; ties take the lowest code id (stable argsort)."""
+    m, _, dsub = codebooks.shape
+    mat = _normalize_rows(mat.astype(np.float64))
+    out = np.empty((len(mat), m), dtype=np.int64)
+    for j in range(m):
+        d2 = _sq_dists(mat[:, j * dsub : (j + 1) * dsub], codebooks[j])
+        out[:, j] = np.argsort(d2, axis=1, kind="stable")[:, 0]
+    return out
+
+
+def _pq_lut(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """LUT[q, j, c] = ||q_subj - codebook[j][c]||^2 over normalized
+    queries; the ADC distance of a coded vector for query q is
+    sum_j LUT[q, j, code_j]."""
+    m, _, dsub = codebooks.shape
     return np.stack(
         [
-            _plain_lloyd(mat[:, j * dsub : (j + 1) * dsub], n_codes, iters)
+            _sq_dists(qmat[:, j * dsub : (j + 1) * dsub], codebooks[j])
             for j in range(m)
-        ]
+        ],
+        axis=1,
     )
 
 
 def _pq_encode_udf(codebooks: np.ndarray):
-    """Arrow-batched encoder: nearest codebook entry per subspace over
-    the normalized vector -> array<long>. Ties take the lowest code id
-    (stable argsort), so codes are deterministic across partitionings.
-    The ONE encode implementation — pq_encode, cosine_topk_ivfpq, and
-    ann_index build/append all call this, so stored and in-session
-    codes are bit-identical by construction."""
-    m, n_codes, dsub = codebooks.shape
-    cb = codebooks.copy()
+    """Arrow-batched encoder (``_pq_codes``) -> array<long>; the index
+    build and incremental ingest encode through it."""
 
     @pandas_udf(ArrayType(LongType()))
     def encode(vecs: pd.Series) -> pd.Series:
-        mat = _normalize_rows(
-            np.array(vecs.tolist(), dtype=np.float64)
-        )
-        out = np.empty((len(mat), m), dtype=np.int64)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d2 = (
-                (sub * sub).sum(axis=1, keepdims=True)
-                - 2.0 * (sub @ cb[j].T)
-                + (cb[j] * cb[j]).sum(axis=1)
-            )
-            out[:, j] = np.argsort(d2, axis=1, kind="stable")[:, 0]
-        return pd.Series(list(out))
+        mat = np.array(vecs.tolist(), dtype=np.float64)
+        return pd.Series(list(_pq_codes(mat, codebooks)))
 
     return encode
 
@@ -1261,6 +1204,356 @@ def pq_encode(
     encode = _pq_encode_udf(codebooks)
     return df.select(
         F.col(id_col).alias("vec_id_pq"), encode(_as_double(vec_col)).alias("codes")
+    )
+
+
+# ---------------------------------------------------------------------------
+# The fused ANN kernel: every approximate variant from one trained value,
+# one candidate pass and one exact tail.
+# ---------------------------------------------------------------------------
+
+_KINDS = ("ivf", "lsh", "pq", "ivfpq")
+
+
+@dataclass(frozen=True)
+class Variant:
+    """One approximate top-k served by ``ann_topk``; ``name`` (default:
+    the kind) tags its output rows.
+
+    * 'ivf' / 'ivfpq': probe ``nprobe`` of ``n_centroids`` spherical
+      k-means cells (``iters`` Lloyd passes; ``train_fraction``
+      overrides the sliver size);
+    * 'lsh': candidates collide with the query in at least one of
+      ``n_tables`` tables of ``n_planes`` signed random projections;
+    * 'pq' / 'ivfpq': rank candidates by ADC distance over ``m`` x
+      ``n_codes`` codebooks (``pq_iters`` Lloyd passes) and rescore
+      the per-query top ``shortlist`` exactly.
+
+    ``prebuilt`` (an ``ann_index.AnnIndex``) supplies the centroids,
+    codebooks and stored (cluster, codes) table in place of in-session
+    training and encoding; m/n_codes then come from the artifact."""
+
+    kind: str
+    name: str | None = None
+    n_centroids: int = 16
+    nprobe: int = 4
+    iters: int = 2
+    train_fraction: float | None = None
+    n_planes: int = 12
+    n_tables: int = 4
+    m: int = 8
+    n_codes: int = 16
+    pq_iters: int = 3
+    shortlist: int = 50
+    prebuilt: object = None
+
+    @property
+    def tag(self) -> str:
+        return self.name or self.kind
+
+    def coarse_key(self) -> tuple | None:
+        if self.kind not in ("ivf", "ivfpq"):
+            return None
+        return (self.n_centroids, self.iters, self.train_fraction)
+
+    def pq_key(self) -> tuple | None:
+        if self.kind not in ("pq", "ivfpq"):
+            return None
+        return (self.m, self.n_codes, self.pq_iters)
+
+    def check(self, dim: int) -> None:
+        if self.kind not in _KINDS:
+            raise ValueError(
+                f"variant kind must be one of {_KINDS}: {self.kind!r}"
+            )
+        idx = self.prebuilt
+        if idx is None:
+            return
+        if self.kind == "lsh":
+            raise ValueError("lsh variants train nothing: no prebuilt index")
+        _check_prebuilt_dim(idx, dim)
+        if self.kind == "ivf" and idx.centroids is None:
+            raise ValueError(f"index kind {idx.kind!r} has no centroids")
+        if self.kind == "pq" and idx.codebooks is None:
+            raise ValueError(f"index kind {idx.kind!r} has no codebooks")
+        if self.kind == "ivfpq" and (
+            idx.centroids is None or idx.codebooks is None
+        ):
+            raise ValueError(
+                f"index kind {idx.kind!r} lacks centroids or codebooks"
+            )
+
+
+def ann_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    variants: list[Variant] | tuple[Variant, ...],
+    k: int = 5,
+    seed: int = DEFAULT_SEED,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    corpus_rows: int | None = None,
+) -> DataFrame:
+    """(variant, query_id, neighbor_id, rank, cos_1e6): the exact-
+    rescored top-k of every ``Variant`` in ``variants``, self-matches
+    excluded (pipeline in the module docstring). The driver collects
+    the widest training sliver (none when nothing trains in-session)
+    and the query set; everything else is one lazy plan. Training keys
+    on value hashes, ADC sums run in fixed subspace order and every tie
+    breaks on ids, so the output is deterministic and a prebuilt
+    variant equals its in-session twin row for row. ``corpus_rows``:
+    see ``train_ann``'s ``n_rows``."""
+    variants = list(variants)
+    tags = [v.tag for v in variants]
+    if not tags or len(set(tags)) != len(tags):
+        raise ValueError(f"need one or more variants, names unique: {tags}")
+    for v in variants:
+        v.check(dim)
+    in_session = [v for v in variants if v.prebuilt is None]
+    # distinct training keys, first-seen order: variants trained alike
+    # share one centroid / codebook array
+    coarse = dict.fromkeys(
+        v.coarse_key() for v in in_session if v.coarse_key()
+    )
+    pq = dict.fromkeys(v.pq_key() for v in in_session if v.pq_key())
+    cents, books = train_ann(
+        corpus, dim, list(coarse), list(pq), seed, id_col, vec_col,
+        n_rows=corpus_rows,
+    )
+    qrows = sorted(
+        queries.select(
+            F.col(id_col).cast("long").alias("i"), F.col(vec_col).alias("v")
+        ).collect(),
+        key=lambda r: r["i"],
+    )
+    qids = np.array([r["i"] for r in qrows], dtype=np.int64)
+    # the dtype the corpus side's Arrow batches carry (float32 here)
+    stored = (
+        np.float32
+        if isinstance(queries.schema[vec_col].dataType.elementType, FloatType)
+        else np.float64
+    )
+    qraw = np.array([r["v"] for r in qrows], dtype=stored)
+    qraw = qraw.reshape(len(qrows), dim)
+    qnorm = _normalize_rows(qraw.astype(np.float64))
+
+    spark = corpus.sparkSession
+    specs, sources = [], []
+    for v in variants:
+        idx = v.prebuilt
+        spec = {
+            "tag": v.tag, "ckey": v.coarse_key(), "pkey": v.pq_key(), "src": 0
+        }
+        if spec["ckey"]:
+            c = cents[spec["ckey"]] if idx is None else idx.centroids
+            spec.update(cents=c, qcells=_probe_cells(qraw, c, v.nprobe))
+        if spec["pkey"]:
+            b = books[spec["pkey"]] if idx is None else idx.codebooks
+            spec.update(books=b, lut=_pq_lut(qnorm, b), shortlist=v.shortlist)
+        if v.kind == "lsh":
+            planes = np.stack(
+                [
+                    srp_planes(dim, v.n_planes, t, seed)
+                    for t in range(v.n_tables)
+                ]
+            )
+            spec.update(planes=planes, qbuckets=_srp_codes(qraw, planes))
+        if idx is not None:
+            spec["src"] = len(sources) + 1
+            codes = idx.codes(spark)
+            if spec["ckey"] and len(qids):
+                # static partition prune: the codes table is hive-
+                # partitioned by cell (ann_index._write_codes) and the
+                # probed cells are known before the scan plans, so the
+                # pass reads nprobe/n_centroids of the FILES
+                probed = sorted({int(x) for x in spec["qcells"].ravel()})
+                codes = codes.where(F.col("cluster").isin(probed))
+            cols = [
+                c for c, key in (("cluster", "ckey"), ("codes", "pkey"))
+                if spec[key]
+            ]
+            sources.append(
+                codes.select(F.lit(spec["src"]).alias("src"), "vec_id", *cols)
+            )
+        specs.append(spec)
+    if any(s["src"] == 0 for s in specs):
+        sources.insert(
+            0,
+            corpus.select(
+                F.lit(0).alias("src"),
+                F.col(id_col).cast("long").alias("vec_id"),
+                F.col(vec_col).alias("v"),
+            ),
+        )
+    # each source carries only the columns its variants read
+    scan = sources[0]
+    for s in sources[1:]:
+        scan = scan.unionByName(s, allowMissingColumns=True)
+    cands = scan.mapInPandas(
+        lambda batches: _fused_candidates(batches, specs, qids),
+        "variant string, query_id long, neighbor_id long, adc_1e6 long",
+    )
+    limits = {s["tag"]: s["shortlist"] for s in specs if "shortlist" in s}
+    if limits:
+        w = Window.partitionBy("variant", "query_id").orderBy(
+            F.col("adc_1e6").asc(), F.col("neighbor_id")
+        )
+        keep = F.lit(True)
+        for tag, n in limits.items():
+            is_tag = F.col("variant") == tag
+            keep = F.when(is_tag, F.col("r") <= n).otherwise(keep)
+        if len(limits) == len(specs):
+            # every variant is cut: a plain bound lets Spark apply the
+            # cut per partition before the shuffle (WindowGroupLimit)
+            keep = (F.col("r") <= max(limits.values())) & keep
+        cands = cands.withColumn("r", F.row_number().over(w)).where(keep)
+    pairs = cands.join(
+        F.broadcast(_query_vectors(queries, id_col, vec_col)), "query_id"
+    ).join(_corpus_vectors(corpus, id_col, vec_col), "neighbor_id")
+    return _topk(pairs, k, ("variant", "query_id"))
+
+
+def _fused_candidates(batches, specs: list[dict], qids: np.ndarray):
+    """The one corpus pass: per Arrow batch, each variant's candidate
+    (query_id, neighbor_id, adc_1e6) rows. Cells, codes and buckets of
+    raw vectors are computed once per batch and shared by the variants
+    trained alike; prebuilt variants read theirs from the stored
+    columns. ADC variants keep their local top ``shortlist`` per query,
+    quantized BEFORE selection so the local cut and the global window
+    sort on the identical (adc_1e6, neighbor_id) key."""
+    for pdf in batches:
+        tags, qcol, ncol, acol = [], [], [], []
+        for src, part in pdf.groupby("src", sort=False):
+            ids = part["vec_id"].to_numpy(dtype=np.int64)
+            raw = np.stack(part["v"].to_numpy()) if src == 0 else None
+            cells, codes, buckets = {}, {}, {}
+            for spec in specs:
+                if spec["src"] != src:
+                    continue
+                ck, pk = spec["ckey"], spec["pkey"]
+                if ck and ck not in cells:
+                    cells[ck] = (
+                        _probe_cells(raw, spec["cents"], 1)[:, 0]
+                        if raw is not None
+                        else part["cluster"].to_numpy(dtype=np.int64)
+                    )
+                if pk and pk not in codes:
+                    codes[pk] = (
+                        _pq_codes(raw, spec["books"])
+                        if raw is not None
+                        else np.array(part["codes"].tolist(), dtype=np.int64)
+                    )
+                if "planes" in spec:
+                    bk = spec["planes"].shape
+                    if bk not in buckets:
+                        buckets[bk] = _srp_codes(raw, spec["planes"])
+                if pk:
+                    dist = np.zeros((len(qids), len(ids)), dtype=np.float64)
+                    for j in range(codes[pk].shape[1]):
+                        dist += spec["lut"][:, j, codes[pk][:, j]]
+                for qi, qid in enumerate(qids):
+                    mask = ids != qid
+                    if ck:
+                        mask &= np.isin(cells[ck], spec["qcells"][qi])
+                    if "planes" in spec:
+                        hit = buckets[bk] == spec["qbuckets"][qi]
+                        mask &= hit.any(axis=1)
+                    nbr = ids[mask]
+                    if pk:
+                        adc = np.floor(dist[qi][mask] * 1e6).astype(np.int64)
+                        order = np.lexsort((nbr, adc))[: spec["shortlist"]]
+                        nbr, adc = nbr[order], adc[order]
+                    else:
+                        adc = np.zeros(len(nbr), dtype=np.int64)
+                    tags.append(np.full(len(nbr), spec["tag"], dtype=object))
+                    qcol.append(np.full(len(nbr), qid, dtype=np.int64))
+                    ncol.append(nbr)
+                    acol.append(adc)
+        if ncol:
+            yield pd.DataFrame(
+                {
+                    "variant": np.concatenate(tags),
+                    "query_id": np.concatenate(qcol),
+                    "neighbor_id": np.concatenate(ncol),
+                    "adc_1e6": np.concatenate(acol),
+                }
+            )
+
+
+def _one_variant(
+    corpus, queries, dim, k, variant, seed, id_col, vec_col, corpus_rows=None
+):
+    return ann_topk(
+        corpus, queries, dim, [variant], k, seed, id_col, vec_col, corpus_rows
+    ).drop("variant")
+
+
+def cosine_topk_lsh(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_planes: int = 12,
+    n_tables: int = 4,
+    seed: int = DEFAULT_SEED,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate cosine top-k via SRP-LSH candidate generation:
+    (query_id, neighbor_id, rank, cos_1e6).
+
+    Candidates = corpus vectors colliding with the query in >=1 table;
+    exact cosine re-rank on candidates only. Recall rises with n_tables
+    and falls with n_planes; 12 planes × 4 tables gives ~90%+ recall@5
+    on random 64-dim data while pruning most of the corpus per query.
+    No training pass: the planes derive from ``seed``."""
+    return _one_variant(
+        corpus, queries, dim, k,
+        Variant("lsh", n_planes=n_planes, n_tables=n_tables),
+        seed, id_col, vec_col,
+    )
+
+
+def cosine_topk_ivf(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_centroids: int = 16,
+    nprobe: int = 4,
+    iters: int = 2,
+    seed: int = DEFAULT_SEED,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    train_fraction: float | None = None,
+    prebuilt=None,
+    corpus_rows: int | None = None,
+) -> DataFrame:
+    """Approximate cosine top-k via an IVF (inverted-file) index.
+
+    The corpus partitions into n_centroids Voronoi cells (one cluster
+    id per vector — the 'inverted lists'); each query probes its nprobe
+    nearest cells and reranks exactly within them. Versus SRP-LSH this
+    adapts to the data distribution (trained centroids) at the cost of
+    a training pass. At 100 TB the assignment output would be written
+    bucketed by cluster so the probe prunes to nprobe/n_centroids of
+    the data per query.
+
+    ``prebuilt`` (an ``ann_index.AnnIndex``) switches to the
+    train-once / serve-many posture: centroids load from the artifact
+    (no training job) and cell assignments come from the persisted
+    codes table (no assignment scan of raw vectors) — raw vectors are
+    only read for the exact rerank. Results are bit-identical to the
+    in-session path with matching parameters (pinned by
+    tests/test_ann_index.py)."""
+    return _one_variant(
+        corpus, queries, dim, k,
+        Variant(
+            "ivf", n_centroids=n_centroids, nprobe=nprobe, iters=iters,
+            train_fraction=train_fraction, prebuilt=prebuilt,
+        ),
+        seed, id_col, vec_col, corpus_rows,
     )
 
 
@@ -1282,129 +1575,26 @@ def cosine_topk_pq(
     """Approximate cosine top-k via PQ ADC shortlist + exact rescore:
     (query_id, neighbor_id, rank, cos_1e6) — the LSH/IVF output shape.
 
-    Serving shape: the corpus is scanned as CODES ONLY (m int64s here;
-    m bytes in a packed production layout) with per-query distances
-    read from a broadcast (n_queries x m x n_codes) lookup table — no
-    float vector math per candidate. Each Arrow batch keeps its local
-    top-``shortlist`` per query (exact for global shortlist
-    selection), a per-query window takes the global shortlist, and
-    only those ids rejoin the raw vectors for the exact cosine
-    re-rank. ADC sums run in fixed subspace order per row ->
-    deterministic; shortlist ties break on neighbor id.
+    Serving shape: the candidate pass reads per-vector CODES (m int64s
+    here; m bytes in a packed production layout) and per-query
+    distances come from a (n_queries x m x n_codes) lookup table — no
+    float vector math per candidate. Only the per-query top
+    ``shortlist`` by ADC distance rejoins the raw vectors for the exact
+    cosine re-rank.
 
     ``prebuilt`` (an ``ann_index.AnnIndex``) is the train-once /
     serve-many posture: codebooks load from the artifact (no training
-    job) and the ADC scan reads the PERSISTED codes table — the
+    job) and the ADC pass reads the PERSISTED codes table — the
     serving path never touches raw corpus vectors except to rescore
     the shortlist. Bit-identical to in-session with matching params
     (pinned by tests/test_ann_index.py)."""
-    if prebuilt is not None:
-        _check_prebuilt_dim(prebuilt, dim)
-        if prebuilt.codebooks is None:
-            raise ValueError(f"index kind {prebuilt.kind!r} has no codebooks")
-        codebooks = prebuilt.codebooks
-        m, n_codes = codebooks.shape[0], codebooks.shape[1]
-        codes = prebuilt.codes(corpus.sparkSession).select(
-            F.col("vec_id").alias("vec_id_pq"), "codes"
-        )
-    else:
-        codebooks = pq_train_codebooks(
-            corpus, dim, m, n_codes, iters, seed, id_col, vec_col,
-            n_rows=corpus_rows,
-        )
-        codes = pq_encode(corpus, codebooks, id_col, vec_col)
-    dsub = dim // m
-    qrows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r["qid"],
-    )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = _normalize_rows(
-        np.array([r["qv"] for r in qrows], dtype=np.float64)
-    )
-    # LUT[q, j, c] = ||q_subj - codebook[j][c]||^2 ; ADC distance of a
-    # coded vector for query q = sum_j LUT[q, j, code_j]
-    nq = len(qids)
-    lut = np.empty((nq, m, n_codes), dtype=np.float64)
-    for j in range(m):
-        qs = qmat[:, j * dsub : (j + 1) * dsub]
-        lut[:, j, :] = (
-            (qs * qs).sum(axis=1, keepdims=True)
-            - 2.0 * (qs @ codebooks[j].T)
-            + (codebooks[j] * codebooks[j]).sum(axis=1)
-        )
-
-    out_schema = "query_id long, neighbor_id long, adc_1e6 long"
-
-    def adc_partial(batches):
-        for pdf in batches:
-            ids = pdf["vec_id_pq"].to_numpy(dtype=np.int64)
-            codes_mat = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            # dist[q, row] = sum over subspaces of LUT lookups
-            dist = np.zeros((nq, len(ids)), dtype=np.float64)
-            for j in range(m):
-                dist += lut[:, j, codes_mat[:, j]]
-            res = []
-            for qi in range(nq):
-                drow = dist[qi]
-                mask = ids != qids[qi]  # self-match excluded
-                cand_ids = ids[mask]
-                # quantize BEFORE the local selection so the local
-                # top-shortlist and the global window sort on the
-                # IDENTICAL key (quantized dist, id) — full-precision
-                # local + quantized global could disagree at the cut
-                # boundary under a different corpus partitioning
-                cand_q = np.floor(drow[mask] * 1e6).astype(np.int64)
-                order = np.lexsort((cand_ids, cand_q))[:shortlist]
-                res.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": cand_ids[order],
-                            "adc_1e6": cand_q[order],
-                        }
-                    )
-                )
-            if res:
-                yield pd.concat(res, ignore_index=True)
-
-    partial = codes.mapInPandas(adc_partial, out_schema)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("adc_1e6").asc(), F.col("neighbor_id")
-    )
-    short = (
-        partial.withColumn("r", F.row_number().over(w_short))
-        .where(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    # exact cosine rescore of the shortlist only
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
-    scored = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
+    return _one_variant(
+        corpus, queries, dim, k,
+        Variant(
+            "pq", m=m, n_codes=n_codes, pq_iters=iters, shortlist=shortlist,
+            prebuilt=prebuilt,
+        ),
+        seed, id_col, vec_col, corpus_rows,
     )
 
 
@@ -1423,7 +1613,6 @@ def cosine_topk_ivfpq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     prebuilt=None,
-    cents: np.ndarray | None = None,
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """IVF-PQ: the composed production serving shape (FAISS's IVFPQ,
@@ -1431,166 +1620,23 @@ def cosine_topk_ivfpq(
     nprobe/n_centroids per query, ADC over PQ codes ranks candidates
     WITHOUT touching raw floats, and only the per-query shortlist is
     rescored exactly. At 100 TB: inverted lists are stored bucketed by
-    cell carrying m-byte codes (32x smaller than float32), the probe
-    join is co-located, and raw vectors are fetched for shortlist ids
-    only.
-
-    Cells come from ivf_train_centroids (sliver-trained, bounded
-    driver state), codebooks from pq_train_codebooks (same sizing
-    rule). Output shape: (query_id, neighbor_id, rank, cos_1e6),
-    identical to the sibling ANN variants. Deterministic: both
-    trainers key on value hashes, ADC sums run in fixed subspace
-    order, all tie-breaks on ids.
+    cell carrying m-byte codes (32x smaller than float32) and raw
+    vectors are fetched for shortlist ids only. ``iters`` drives both
+    the coarse k-means and the codebooks.
 
     ``prebuilt`` (an ``ann_index.AnnIndex`` of kind 'ivfpq') is the
     full train-once / serve-many posture: centroids + codebooks load
-    from the artifact and the candidate scan reads the persisted
-    (cell, codes) table directly — the query path runs zero training
-    jobs and zero raw-vector scans outside the shortlist rescore.
-    Bit-identical to in-session with matching params (pinned by
-    tests/test_ann_index.py).
-
-    ``cents`` (consulted only when ``prebuilt`` is None): shared
-    pre-trained coarse centroids — see ``cosine_topk_ivf``. The ivf
-    and ivfpq variants use IDENTICAL coarse-training params by
-    default, so a caller evaluating both trains the coarse k-means
-    once (r12, guide §2.4)."""
-    if prebuilt is not None:
-        _check_prebuilt_dim(prebuilt, dim)
-        if prebuilt.centroids is None or prebuilt.codebooks is None:
-            raise ValueError(
-                f"index kind {prebuilt.kind!r} lacks centroids or codebooks"
-            )
-        cents = prebuilt.centroids
-        codebooks = prebuilt.codebooks
-        m, n_codes = codebooks.shape[0], codebooks.shape[1]
-        codes = prebuilt.codes(corpus.sparkSession).select(
-            F.col("vec_id").alias("vec_id_pq"), "cluster", "codes"
-        )
-    else:
-        if cents is None:
-            cents = ivf_train_centroids(
-                corpus, dim, n_centroids, iters, seed, id_col, vec_col,
-                n_rows=corpus_rows,
-            )
-        codebooks = pq_train_codebooks(
-            corpus, dim, m, n_codes, iters, seed, id_col, vec_col,
-            n_rows=corpus_rows,
-        )
-        assign = _ivf_probe_udf(cents, 1)
-        # one corpus scan computes BOTH the cell and the codes (two
-        # Arrow UDFs over the same projection) — a join of the two
-        # passes measured 33.6s at 2M vectors, scan-side fusion
-        # removes it
-        encode = _pq_encode_udf(codebooks)
-        codes = corpus.select(
-            F.col(id_col).alias("vec_id_pq"),
-            assign(F.col(vec_col))[0].alias("cluster"),
-            encode(_as_double(vec_col)).alias("codes"),
-        )
-    dsub = dim // m
-    probe = _ivf_probe_udf(cents, nprobe)
-    qrows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"),
-            _as_double(vec_col).alias("qv"),
-            probe(F.col(vec_col)).alias("cells"),
-        ).collect(),
-        key=lambda r: r["qid"],
-    )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = _normalize_rows(
-        np.array([r["qv"] for r in qrows], dtype=np.float64)
-    )
-    qcells = [set(r["cells"]) for r in qrows]
-    if prebuilt is not None and qcells:
-        # static partition prune: the artifact's codes table is hive-
-        # partitioned by cluster (ann_index._write_codes), and the
-        # union of probed cells is known driver-side BEFORE the scan
-        # plans — an isin() filter here becomes a PartitionFilter, so
-        # the ADC stage reads nprobe/n_centroids of the FILES, not
-        # just of the rows (the inverted-list I/O win at 100 TB)
-        codes = codes.where(
-            F.col("cluster").isin(sorted(set().union(*qcells)))
-        )
-    nq = len(qids)
-    lut = np.empty((nq, m, n_codes), dtype=np.float64)
-    for j in range(m):
-        qs = qmat[:, j * dsub : (j + 1) * dsub]
-        lut[:, j, :] = (
-            (qs * qs).sum(axis=1, keepdims=True)
-            - 2.0 * (qs @ codebooks[j].T)
-            + (codebooks[j] * codebooks[j]).sum(axis=1)
-        )
-
-    out_schema = "query_id long, neighbor_id long, adc_1e6 long"
-
-    def adc_partial(batches):
-        for pdf in batches:
-            ids = pdf["vec_id_pq"].to_numpy(dtype=np.int64)
-            cells = pdf["cluster"].to_numpy(dtype=np.int64)
-            codes_mat = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            dist = np.zeros((nq, len(ids)), dtype=np.float64)
-            for j in range(m):
-                dist += lut[:, j, codes_mat[:, j]]
-            res = []
-            for qi in range(nq):
-                # inverted-list prune: only this query's probed cells
-                mask = (ids != qids[qi]) & np.isin(
-                    cells, list(qcells[qi])
-                )
-                cand_ids = ids[mask]
-                if not len(cand_ids):
-                    continue
-                # quantized key for BOTH local and global selection
-                # (see cosine_topk_pq: boundary ties must not depend
-                # on corpus partitioning)
-                cand_q = np.floor(dist[qi][mask] * 1e6).astype(np.int64)
-                order = np.lexsort((cand_ids, cand_q))[:shortlist]
-                res.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": cand_ids[order],
-                            "adc_1e6": cand_q[order],
-                        }
-                    )
-                )
-            if res:
-                yield pd.concat(res, ignore_index=True)
-
-    partial = codes.mapInPandas(adc_partial, out_schema)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("adc_1e6").asc(), F.col("neighbor_id")
-    )
-    short = (
-        partial.withColumn("r", F.row_number().over(w_short))
-        .where(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        norm(F.col("qv")) * norm(F.col("cv"))
-    )
-    scored = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.floor(cos * F.lit(1000000.0)).cast("long").alias("cos_1e6"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_1e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_1e6")
+    from the artifact and the candidate pass reads the persisted
+    (cell, codes) table, pruned to the probed cells' partitions — the
+    query path runs zero training jobs and zero raw-vector scans
+    outside the shortlist rescore. Bit-identical to in-session with
+    matching params (pinned by tests/test_ann_index.py)."""
+    return _one_variant(
+        corpus, queries, dim, k,
+        Variant(
+            "ivfpq", n_centroids=n_centroids, nprobe=nprobe, iters=iters,
+            m=m, n_codes=n_codes, pq_iters=iters, shortlist=shortlist,
+            prebuilt=prebuilt,
+        ),
+        seed, id_col, vec_col, corpus_rows,
     )

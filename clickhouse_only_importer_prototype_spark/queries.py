@@ -1391,7 +1391,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells; the array column never leaves the JVM.
     """
     emb = load(spark, sf_dir, "embeddings")
-    nrm = sim_ops.norm(F.col("embedding").cast("array<double>"))
+    nrm = sim_ops.norm("CAST(embedding AS ARRAY<DOUBLE>)")
     return (
         emb.groupBy("label")
         .agg(
@@ -4050,53 +4050,57 @@ def ann_cosine_topk_pq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall audit of both approximate ANN variants against the
-    oracled brute-force top-k (operators/similarity.topk_recall).
+    """Recall audit of all four approximate ANN variants against the
+    oracled brute-force top-k (operators/similarity.topk_recall_floors).
 
     The approximate side is engine-only forever (no SQL twin), but its
     RECALL against the deterministic brute force is computable
-    in-engine and stable as a floor check: IVF >= 0.5, SRP-LSH >= 0.7
-    (measured 0.56-0.60 / 0.90-0.98 at sf0.01-sf0.1; both floors hold
-    with margin). The oracle recomputes truth_pairs (k rows per query
-    — the brute-force contract) and pins meets_floor TRUE, so recall
-    drift below the floor hash-mismatches the hard gate."""
+    in-engine and stable as a floor check (floors and measured recall
+    in ``_ANN_EVAL_FLOORS``). The oracle recomputes truth_pairs (k rows
+    per query — the brute-force contract) and pins meets_floor TRUE, so
+    recall drift below a floor hash-mismatches the hard gate."""
+    truth, approx = _ann_eval_topk(spark, sf_dir)
+    return sim_ops.topk_recall_floors(
+        truth, approx, {v: f[0] for v, f in _ANN_EVAL_FLOORS.items()}
+    )
+
+
+#: The variants ann_recall_check and ann_ranking_quality gate, all
+#: served by one ``sim_ops.ann_topk`` call: ivf and ivfpq share one
+#: coarse k-means (identical training keys), pq and ivfpq one sliver.
+_ANN_EVAL_VARIANTS = (
+    sim_ops.Variant("ivf", n_centroids=16, nprobe=4),
+    sim_ops.Variant("lsh", n_planes=4, n_tables=16),
+    sim_ops.Variant("pq", m=8, n_codes=32, shortlist=200),
+    sim_ops.Variant("ivfpq", n_codes=32, shortlist=200, pq_iters=2),
+)
+
+#: variant -> (recall, MRR, NDCG) floors per 1000. Measured at
+#: sf0.01-sf0.1: recall 0.56-0.60 (ivf), 0.90-0.98 (lsh), 1.0/0.90
+#: (pq), 0.58/0.54 (ivfpq — tracks the coarse prune, like ivf);
+#: mrr/ndcg 0.90/0.65 (ivf), 1.00/0.93+ (lsh, pq), 1.00/0.66+ (ivfpq).
+_ANN_EVAL_FLOORS = {
+    "ivf": (500, 600, 400),
+    "lsh": (700, 800, 700),
+    "pq": (600, 800, 700),
+    "ivfpq": (450, 600, 400),
+}
+
+
+def _ann_eval_topk(spark: SparkSession, sf_dir: str):
+    """(brute-force truth, tagged approximate top-5) for queries
+    vec_id < 10. Truth stays its own JVM-only plan: split out of the
+    kernel's output by a variant filter, it would be pushed below the
+    window into the Python candidate pass and run that pass twice.
+    Nothing is persisted, so no call leaves cached state behind."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    # tiny (n_queries x k rows) but referenced by both variants' semi
-    # joins and the totals — persist so brute force runs once
-    truth = sim_ops.cosine_topk_bruteforce(emb, q, k=5).persist()
-    # ivf and ivfpq share IDENTICAL coarse-training params (n_centroids
-    # 16, iters 2, default seed), so train the seeded k-means ONCE and
-    # inject it — deterministic training makes the shared array
-    # bit-identical to per-variant retraining (r12, guide §2.4; pinned
-    # by tests/test_similarity_shared_training.py). Footer-exact row
-    # counts kill the trainers' sizing count jobs (guide §1.2).
-    nrows = _footer_rows(sf_dir, "embeddings")
-    cents = sim_ops.ivf_train_centroids(
-        emb, dim=64, n_centroids=16, iters=2, n_rows=nrows
+    approx = sim_ops.ann_topk(
+        emb, q, dim=64, variants=_ANN_EVAL_VARIANTS, k=5,
+        # footer-exact count of the unfiltered corpus: no sizing job
+        corpus_rows=_footer_rows(sf_dir, "embeddings"),
     )
-    ivf = sim_ops.cosine_topk_ivf(
-        emb, q, dim=64, k=5, n_centroids=16, nprobe=4, cents=cents
-    )
-    lsh = sim_ops.cosine_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=4, n_tables=16
-    )
-    pq = sim_ops.cosine_topk_pq(
-        emb, q, dim=64, k=5, m=8, n_codes=32, shortlist=200,
-        corpus_rows=nrows,
-    )
-    ivfpq = sim_ops.cosine_topk_ivfpq(
-        emb, q, dim=64, k=5, cents=cents, corpus_rows=nrows
-    )
-    return (
-        sim_ops.topk_recall(truth, ivf, "ivf", 500)
-        .unionByName(sim_ops.topk_recall(truth, lsh, "lsh", 700))
-        # PQ floor 0.6: measured 1.0 / 0.90 at sf0.01 / sf0.1
-        .unionByName(sim_ops.topk_recall(truth, pq, "pq", 600))
-        # IVFPQ floor 0.45: measured 0.58 / 0.54 — tracks the coarse
-        # prune, like standalone IVF's 0.5 floor at measured 0.56
-        .unionByName(sim_ops.topk_recall(truth, ivfpq, "ivfpq", 450))
-    )
+    return sim_ops.cosine_topk_bruteforce(emb, q, k=5), approx
 
 
 _ANN_INDEX_DIRS: dict[tuple[str, str], str] = {}
@@ -4146,61 +4150,58 @@ def ann_prebuilt_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seeded, partition-stable init) and float64 survives the parquet
     round-trip bit-exactly — so the oracle pins ``identical`` TRUE per
     variant and any artifact-layout, loader, or serving-path drift
-    hash-mismatches the hard gate. The comparison runs in-engine as a
-    signed-multiplicity fold: union the sides with weight +1/-1, group
-    by the full row, and the multisets are equal iff no group's weight
-    sum is nonzero — exactly symmetric-exceptAll emptiness, in ONE
-    aggregation per variant instead of two exceptAll joins + crossJoin
-    over two persisted frames (r11 optimization: each side is now
-    referenced once, so the persists and their materialization jobs
-    are gone; guide §2.4 — shared-subtree jobs removed outright;
-    plan files in plans/r11).
+    hash-mismatches the hard gate. Both sides of all three variants
+    come from ONE ``sim_ops.ann_topk`` call (one training collect, one
+    candidate pass over the raw corpus and the three codes tables).
+    The comparison is a signed-multiplicity fold: weight in-session
+    rows +1 and served rows -1, group by (variant, full row), and the
+    multisets are equal iff no group's weight sum is nonzero — exactly
+    symmetric-exceptAll emptiness in one aggregation.
 
     Scale rationale: at 100 TB the index IS the product — retraining
     per query is a toy posture. This gate certifies that switching to
     the artifact path changes NOTHING about results, which is what
     makes the offline-build + online-serve split deployable."""
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 8)
-    # the in-session ivf and ivfpq sides train the SAME seeded coarse
-    # k-means (identical default params) — train once, inject into
-    # both (r12, guide §2.4; bit-identical by deterministic training,
-    # and the oracle still pins identical=TRUE per variant); footer-
-    # exact counts for the remaining trainers' sizing
-    nrows = _footer_rows(sf_dir, "embeddings")
-    cents = sim_ops.ivf_train_centroids(
-        emb, dim=64, n_centroids=16, iters=2, n_rows=nrows
+    kinds = ("ivf", "ivfpq", "pq")
+    # each kind's default serving params (cosine_topk_<kind>)
+    params = {
+        "ivf": {},
+        "ivfpq": {"n_codes": 32, "shortlist": 200, "pq_iters": 2},
+        "pq": {},
+    }
+    variants = [sim_ops.Variant(kind, **params[kind]) for kind in kinds] + [
+        sim_ops.Variant(
+            kind,
+            name=f"{kind}_prebuilt",
+            prebuilt=ann_index_fixture(spark, sf_dir, kind),
+            **params[kind],
+        )
+        for kind in kinds
+    ]
+    topk = sim_ops.ann_topk(
+        emb, emb.where(F.col("vec_id") < 8), dim=64, variants=variants, k=5,
+        corpus_rows=_footer_rows(sf_dir, "embeddings"),
     )
-    plans = []
-    for kind, fn in (
-        ("ivf", sim_ops.cosine_topk_ivf),
-        ("ivfpq", sim_ops.cosine_topk_ivfpq),
-        ("pq", sim_ops.cosine_topk_pq),
-    ):
-        idx = ann_index_fixture(spark, sf_dir, kind)
-        extra = {"corpus_rows": nrows}
-        if kind != "pq":
-            extra["cents"] = cents
-        insession = fn(emb, q, dim=64, k=5, **extra)
-        served = fn(emb, q, dim=64, k=5, prebuilt=idx)
-        cols = insession.columns
-        signed = insession.withColumn("__w", F.lit(1)).unionByName(
-            served.withColumn("__w", F.lit(-1))
+    served = F.col("variant").endswith("_prebuilt")
+    diff = (
+        topk.groupBy(
+            F.regexp_replace("variant", "_prebuilt$", "").alias("base"),
+            "query_id", "neighbor_id", "rank", "cos_1e6",
         )
-        plans.append(
-            signed.groupBy(*cols)
-            .agg(F.sum("__w").alias("__d"))
-            .where(F.col("__d") != 0)
-            .agg(F.count(F.lit(1)).alias("n_diff"))
-            .select(
-                F.lit(kind).alias("variant"),
-                (F.col("n_diff") == 0).alias("identical"),
-            )
-        )
-    out = plans[0]
-    for p in plans[1:]:
-        out = out.unionByName(p)
-    return out
+        .agg(F.sum(F.when(served, -1).otherwise(1)).alias("__d"))
+        .where(F.col("__d") != 0)
+    )
+    n_diff = diff.agg(
+        *[
+            F.count(F.when(F.col("base") == kind, 1)).alias(kind)
+            for kind in kinds
+        ]
+    )
+    return n_diff.selectExpr(
+        "stack(3, 'ivf', ivf = 0, 'ivfpq', ivfpq = 0, 'pq', pq = 0)"
+        " AS (variant, identical)"
+    )
 
 
 _ANN_LIFECYCLE_DIRS: dict[str, tuple[str, str, str]] = {}
@@ -11724,63 +11725,19 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-aware quality audit of both ANN variants vs the exact
-    brute-force top-5 (operators/similarity.topk_ranking_quality):
-    MRR (where the first true neighbor lands) and binary NDCG@5 (how
-    well the whole list is ordered) as pinned floor booleans —
-    same gate pattern as ann_recall_check, but sensitive to ORDERING
-    regressions recall can't see (an ANN that returns the right set
-    reversed passes recall and fails NDCG). Floors hold with margin:
-    measured mrr/ndcg 0.90/0.65 (ivf), 1.00/0.93+ (lsh),
-    1.00/0.93+ (pq), 1.00/0.66+ (ivfpq) at sf0.01-sf0.1 vs floors
-    0.60/0.40 (ivf, ivfpq — the coarse prune bounds list ordering)
-    and 0.80/0.70 (lsh, pq)."""
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    truth = sim_ops.cosine_topk_bruteforce(emb, q, k=5).persist()
-    # shared seeded coarse k-means for ivf + ivfpq (identical training
-    # params -> identical centroids; r12, guide §2.4 — see
-    # ann_recall_check), footer-exact counts for the trainer sizing
-    nrows = _footer_rows(sf_dir, "embeddings")
-    cents = sim_ops.ivf_train_centroids(
-        emb, dim=64, n_centroids=16, iters=2, n_rows=nrows
-    )
-    ivf = sim_ops.cosine_topk_ivf(
-        emb, q, dim=64, k=5, n_centroids=16, nprobe=4, cents=cents
-    )
-    lsh = sim_ops.cosine_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=4, n_tables=16
-    )
-    pq = sim_ops.cosine_topk_pq(
-        emb, q, dim=64, k=5, m=8, n_codes=32, shortlist=200,
-        corpus_rows=nrows,
-    )
-    ivfpq = sim_ops.cosine_topk_ivfpq(
-        emb, q, dim=64, k=5, cents=cents, corpus_rows=nrows
-    )
-    return (
-        sim_ops.topk_ranking_quality(
-            truth, ivf, "ivf", k=5,
-            mrr_floor_per_1000=600, ndcg_floor_per_1000=400,
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, lsh, "lsh", k=5,
-                mrr_floor_per_1000=800, ndcg_floor_per_1000=700,
-            )
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, pq, "pq", k=5,
-                mrr_floor_per_1000=800, ndcg_floor_per_1000=700,
-            )
-        )
-        .unionByName(
-            sim_ops.topk_ranking_quality(
-                truth, ivfpq, "ivfpq", k=5,
-                mrr_floor_per_1000=600, ndcg_floor_per_1000=400,
-            )
-        )
+    """Rank-aware quality audit of all four approximate ANN variants vs
+    the exact brute-force top-5 (operators/similarity.
+    topk_ranking_floors): MRR (where the first true neighbor lands) and
+    binary NDCG@5 (how well the whole list is ordered) as pinned floor
+    booleans — same gate pattern and the same top-k as
+    ann_recall_check, but sensitive to ORDERING regressions recall
+    can't see (an ANN that returns the right set reversed passes recall
+    and fails NDCG). Floors (``_ANN_EVAL_FLOORS``) hold with margin;
+    ivf and ivfpq sit lower because the coarse prune bounds list
+    ordering."""
+    truth, approx = _ann_eval_topk(spark, sf_dir)
+    return sim_ops.topk_ranking_floors(
+        truth, approx, 5, {v: f[1:] for v, f in _ANN_EVAL_FLOORS.items()}
     )
 
 

@@ -1,11 +1,12 @@
-"""Shared coarse-training contract (r12 optimization, guide §2.4).
+"""Shared-training contract of the fused ANN kernel.
 
-The ANN evaluation queries train the seeded coarse k-means ONCE and
-inject it into both the ivf and ivfpq variants. That is only sound
-because training is deterministic: identical (corpus, dim, n_centroids,
-iters, seed, train_fraction) must yield bit-identical centroids, and
-injecting them must yield bit-identical query results vs the
-train-inside path. These tests pin both halves.
+``similarity.ann_topk`` trains each distinct coarse k-means and
+codebook set ONCE per call and serves every variant from it (the ANN
+evaluation queries share one coarse k-means between ivf and ivfpq).
+That is only sound because training is deterministic: identical
+(corpus, dim, n_centroids, iters, seed, train_fraction) must yield
+bit-identical centroids, and the shared value must yield bit-identical
+query results vs a single-variant call. These tests pin both halves.
 """
 
 from __future__ import annotations
@@ -36,30 +37,32 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_injected_cents_match_ivf_default_path(embeddings):
-    q = embeddings.where("vec_id < 6")
-    cents = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2
+def _shared(embeddings, q, tag):
+    """``tag``'s rows from one kernel call serving ivf and ivfpq off one
+    shared coarse k-means (identical training keys)."""
+    out = similarity.ann_topk(
+        embeddings, q, 64,
+        [
+            similarity.Variant("ivf", n_centroids=16, nprobe=4),
+            similarity.Variant("ivfpq", n_codes=32, shortlist=200, pq_iters=2),
+        ],
+        k=5,
     )
+    return out.where(out.variant == tag).drop("variant")
+
+
+def test_shared_training_matches_ivf_default_path(embeddings):
+    q = embeddings.where("vec_id < 6")
     base = similarity.cosine_topk_ivf(
         embeddings, q, dim=64, k=5, n_centroids=16, nprobe=4
     )
-    shared = similarity.cosine_topk_ivf(
-        embeddings, q, dim=64, k=5, n_centroids=16, nprobe=4, cents=cents
-    )
-    assert _rows(base) == _rows(shared)
+    assert _rows(base) == _rows(_shared(embeddings, q, "ivf"))
 
 
-def test_injected_cents_match_ivfpq_default_path(embeddings):
+def test_shared_training_matches_ivfpq_default_path(embeddings):
     q = embeddings.where("vec_id < 6")
-    cents = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2
-    )
     base = similarity.cosine_topk_ivfpq(embeddings, q, dim=64, k=5)
-    shared = similarity.cosine_topk_ivfpq(
-        embeddings, q, dim=64, k=5, cents=cents
-    )
-    assert _rows(base) == _rows(shared)
+    assert _rows(base) == _rows(_shared(embeddings, q, "ivfpq"))
 
 
 def test_n_rows_hint_is_bit_identical(embeddings):
@@ -82,19 +85,33 @@ def test_n_rows_hint_is_bit_identical(embeddings):
     assert np.array_equal(ca, cb)
 
 
-def test_prebuilt_takes_precedence_over_cents(embeddings, tmp_path):
-    """prebuilt wins: cents is only consulted on the in-session path."""
+def test_prebuilt_variant_ignores_session_training(embeddings, tmp_path):
+    """A prebuilt variant serves from its artifact's centroids even
+    when the same call trains a coarse k-means in-session."""
     from clickhouse_only_importer_prototype_spark.operators import ann_index
 
     q = embeddings.where("vec_id < 3")
     path = str(tmp_path / "ivf_idx")
-    ann_index.build_ann_index(embeddings, path, "ivf", dim=64)
-    idx = ann_index.load_ann_index(path)
-    # deliberately WRONG cents: must be ignored when prebuilt is given
-    wrong = np.zeros((16, 64), dtype=np.float64)
-    wrong[:, 0] = 1.0
-    served = similarity.cosine_topk_ivf(
-        embeddings, q, dim=64, k=5, prebuilt=idx, cents=wrong
+    # built on half the corpus, so its centroids differ from in-session
+    ann_index.build_ann_index(
+        embeddings.where("vec_id % 2 = 0"), path, "ivf", dim=64
     )
+    idx = ann_index.load_ann_index(path)
+    session = similarity.ivf_train_centroids(embeddings, dim=64)
+    assert not np.array_equal(idx.centroids, session)
+    both = similarity.ann_topk(
+        embeddings, q, 64,
+        [
+            similarity.Variant("ivf"),
+            similarity.Variant("ivf", name="served", prebuilt=idx),
+        ],
+        k=5,
+    )
+    served = both.where(both.variant == "served").drop("variant")
+    alone = similarity.cosine_topk_ivf(
+        embeddings, q, dim=64, k=5, prebuilt=idx
+    )
+    assert _rows(served) == _rows(alone)
+    in_session = both.where(both.variant == "ivf").drop("variant")
     base = similarity.cosine_topk_ivf(embeddings, q, dim=64, k=5)
-    assert _rows(served) == _rows(base)
+    assert _rows(in_session) == _rows(base)

@@ -16,7 +16,7 @@ vector store does:
   * ``encode_new_vectors`` — the incremental posture: NEW vectors are
     encoded against the FROZEN codebooks/centroids and appended to the
     codes table. No retrain, no touch of existing codes. Codebook
-    drift is a rebuild decision (recall audits — ``topk_recall`` —
+    drift is a rebuild decision (recall audits — ``topk_recall_floors`` —
     decide when), never an implicit side effect of ingest.
 
 Artifact layout (directory of parquet tables)::

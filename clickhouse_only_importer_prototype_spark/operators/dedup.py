@@ -56,18 +56,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Drop exact duplicates, keeping the lowest doc_id per text.
-
-    Window-free formulation: semi-join against the keeper set — two
-    narrow-ish shuffles on uniform keys, no single-partition sort.
-    """
-    keepers = exact_duplicates(df, text_col).select(
-        F.col("keeper_doc_id").alias("doc_id")
-    )
-    return df.join(keepers, "doc_id", "left_semi")
-
-
 def _exact_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, rep_id): every doc mapped to the min doc_id sharing its
     normalized-text fingerprint.

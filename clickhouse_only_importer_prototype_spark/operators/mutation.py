@@ -12,13 +12,15 @@ Reference semantics (mutation/transformer.go):
     incremented per MAF row, threaded across files (:30-52, :410).
 
 Scale design for the surrogate key (SURVEY §7.5.1): a naive global
-``row_number()`` funnels 100 TB through one partition. Instead:
-two-pass prefix-sum — (1) count rows per file (an aggregate over
-file-name, metadata-sized result), (2) ``row_number() OVER
-(PARTITION BY file ORDER BY scan_order)`` plus the file's broadcast
-offset. The only shuffle is the per-file window partition, parallel
-across files. The reference's own file order is nondeterministic (Go
-map iteration, cmd/cli/main.go:309,496); we define sorted-path order.
+``row_number()`` funnels 100 TB through one partition. Instead,
+``with_sequential_ids_multi`` runs a two-pass prefix-sum over every
+scan of a run — (1) count rows per (file, scan partition), a
+metadata-sized aggregate, (2) ``row_number()`` within each (file,
+scan partition) plus its broadcast offset. The only shuffle is that
+window partition, parallel across files and splits. The reference's
+own file order is nondeterministic (Go map iteration,
+cmd/cli/main.go:309,496); ids here follow the caller's discovery
+order.
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ from clickhouse_only_importer_prototype_spark.schemas import (
 )
 
 _FILE = "__file"
-_SCAN_ORDER = "__scan_order"
 EVENT_ID = "MUTATION_EVENT_ID"
 
 
@@ -44,43 +45,6 @@ def field_or_empty(df: DataFrame, name: str) -> F.Column:
     return F.lit("")
 
 
-def with_sequential_ids(df: DataFrame, start: int = 0) -> DataFrame:
-    """Assign dense, gapless int64 ids in (file, scan-order) order.
-
-    Two-pass prefix-sum (see module docstring), partition-parallel
-    WITHIN each file: ``__mid`` (monotonically_increasing_id) encodes
-    ``partition_id << 33 + row_offset``, so ordering by ``__mid``
-    within a file is identical to ordering by (scan partition, row
-    offset). Ranking therefore partitions the window by (file, scan
-    partition) — a single 100 GB MAF ranks across all its scan splits
-    in parallel instead of funneling through one task — and the driver
-    prefix-sums per-(file, partition) counts (metadata-scale: one row
-    per scan split) in (sorted path, partition) order, which yields
-    byte-identical ids to a per-file global rank.
-
-    ASSUMPTION (load-bearing): ``__pid``/``__mid`` are identical across
-    the counts pass and the rank pass. True when both evaluate the same
-    plan over unchanged files — FilePartition packing is a stable sort
-    of splits — but a scan-conf change between the passes (AQE
-    coalesce, ``spark.sql.files.maxPartitionBytes``) would repartition
-    the second scan. Rather than silently permuting ids, the rank pass
-    re-checks every (file, partition) row count against the broadcast
-    expectation and raises mid-plan on any drift.
-    """
-    tagged = _tagged_scan(df)
-    # no persist: per-(file, partition) counts are recompute-invariant
-    # and __pid/__mid are stable for an identical plan over identical
-    # files (same FilePartition packing), so the counts pass and the
-    # ranking pass can each evaluate the scan — a pinned full-MAF cache
-    # per file would leak for the session lifetime
-    counts = tagged.groupBy(_FILE, "__pid").count().collect()
-    offsets, acc = [], start
-    for row in sorted(counts, key=lambda r: (r[_FILE], r["__pid"])):
-        offsets.append((row[_FILE], row["__pid"], acc, row["count"]))
-        acc += row["count"]
-    return _rank_with_offsets(tagged, offsets, keep_file=False)
-
-
 def _tagged_scan(df: DataFrame) -> DataFrame:
     return (
         df.withColumn(_FILE, F.input_file_name())
@@ -89,12 +53,31 @@ def _tagged_scan(df: DataFrame) -> DataFrame:
     )
 
 
-def _rank_with_offsets(
-    tagged: DataFrame, offsets: list[tuple], keep_file: bool
-) -> DataFrame:
+def _rank_with_offsets(tagged: DataFrame, offsets: list[tuple]) -> DataFrame:
     """Rank pass over a ``_tagged_scan`` frame with driver-computed
-    (file, pid, offset, expected-count) rows; the drift guard raises
-    mid-plan on any packing change (see with_sequential_ids)."""
+    (file, pid, offset, expected-count) rows.
+
+    Partition-parallel WITHIN each file: ``__mid``
+    (monotonically_increasing_id) encodes ``partition_id << 33 +
+    row_offset``, so ordering by ``__mid`` within a file is identical
+    to ordering by (scan partition, row offset). Ranking therefore
+    partitions the window by (file, scan partition) — a single 100 GB
+    MAF ranks across all its scan splits in parallel instead of
+    funneling through one task — and offsets prefix-sum the
+    per-(file, partition) counts, which yields byte-identical ids to a
+    per-file global rank.
+
+    ASSUMPTION (load-bearing): ``__pid``/``__mid`` are identical across
+    the counts pass and the rank pass. True when both evaluate the same
+    plan over unchanged files — FilePartition packing is a stable sort
+    of splits — but a scan-conf change between the passes (AQE
+    coalesce, ``spark.sql.files.maxPartitionBytes``) would repartition
+    the second scan. Rather than silently permuting ids, the rank pass
+    re-checks every (file, partition) row count against the broadcast
+    expectation and raises mid-plan on any drift. The two passes each
+    evaluate the scan rather than persist it: a pinned full-MAF cache
+    per file would leak for the session lifetime.
+    """
     spark = tagged.sparkSession
     offsets_df = arrow_local_df(
         spark, offsets, f"{_FILE} string, __pid int, __offset long, __expect long"
@@ -107,9 +90,6 @@ def _rank_with_offsets(
     guard_ok = F.col("__expect").isNotNull() & (
         F.count("*").over(w_full) == F.col("__expect")
     )
-    drop_cols = ["__pid", "__mid", "__offset", "__expect"]
-    if not keep_file:
-        drop_cols.append(_FILE)
     return (
         tagged.join(F.broadcast(offsets_df), [_FILE, "__pid"], "left")
         .withColumn(
@@ -123,7 +103,7 @@ def _rank_with_offsets(
                     F.concat_ws(
                         " ",
                         F.lit(
-                            "with_sequential_ids: FilePartition packing"
+                            "with_sequential_ids_multi: FilePartition packing"
                             " drifted between the counts pass and the"
                             " rank pass for"
                         ),
@@ -135,15 +115,13 @@ def _rank_with_offsets(
             )
             .cast("long"),
         )
-        .drop(*drop_cols)
+        .drop("__pid", "__mid", "__offset", "__expect")
     )
 
 
 def with_sequential_ids_multi(
-    frames: list[DataFrame],
-    start: int = 0,
-    file_order: dict[str, int] | None = None,
-) -> list[DataFrame]:
+    frames: list[DataFrame], start: int, file_order: dict[str, int]
+) -> tuple[list[DataFrame], int]:
     """Gapless ids ACROSS several scan frames in one global
     (file, partition) order — the single-job D3 shape.
 
@@ -155,7 +133,10 @@ def with_sequential_ids_multi(
     its broadcast offsets — byte-identical ids to the sequential
     per-file loop, with every heavy pass running as a distributed
     scan. Output frames KEEP the ``__file`` tag so the caller can join
-    per-file attributes (study/profile) before projecting.
+    per-file attributes (study/profile) before projecting. Also returns
+    the next free id (``start`` plus every counted row; an empty input
+    leaves it at ``start``), for threading into a later run
+    (mutation/transformer.go:131,167-169).
 
     ``file_order`` maps each scan file URI (``input_file_name()``
     form) to its rank in the caller's processing order. The sequential
@@ -164,50 +145,28 @@ def with_sequential_ids_multi(
     can permute files whose raw paths contain characters that encode
     (``'a b' -> 'a%20b'``) — the caller must pass the discovery order
     explicitly for the byte-identical-ids contract to survive exotic
-    filenames. ``None`` falls back to lexicographic URI order (only
-    correct when every path is encoding-invariant); a scanned URI
-    absent from the map raises rather than silently mis-ordering."""
+    filenames. A scanned URI absent from the map raises rather than
+    silently mis-ordering."""
     taggeds = [_tagged_scan(f) for f in frames]
     all_counts: list[tuple] = []
     for i, t in enumerate(taggeds):
         for row in t.groupBy(_FILE, "__pid").count().collect():
             all_counts.append((row[_FILE], row["__pid"], row["count"], i))
-    if file_order is not None:
-        missing = sorted(
-            {c[0] for c in all_counts if c[0] not in file_order}
+    missing = sorted({c[0] for c in all_counts if c[0] not in file_order})
+    if missing:
+        raise ValueError(
+            "with_sequential_ids_multi: scan file(s) missing from "
+            f"file_order map: {missing[:5]}"
         )
-        if missing:
-            raise ValueError(
-                "with_sequential_ids_multi: scan file(s) missing from "
-                f"file_order map: {missing[:5]}"
-            )
-
-        def key(x):
-            return (file_order[x[0]], x[1])
-
-    else:
-
-        def key(x):
-            return (x[0], x[1])
-
     per_frame: list[list[tuple]] = [[] for _ in frames]
     acc = start
-    for fpath, pid, cnt, i in sorted(all_counts, key=key):
+    for fpath, pid, cnt, i in sorted(
+        all_counts, key=lambda x: (file_order[x[0]], x[1])
+    ):
         per_frame[i].append((fpath, pid, acc, cnt))
         acc += cnt
-    return [
-        _rank_with_offsets(t, per_frame[i], keep_file=True)
-        for i, t in enumerate(taggeds)
-    ]
-
-
-def next_event_id(df_with_ids: DataFrame, start: int = 0) -> int:
-    """Final id + 1, for threading into a subsequent run
-    (mutation/transformer.go:131,167-169). An empty file returns
-    ``start`` unchanged — returning 0 would reset the cross-file
-    counter and duplicate ids for every later file."""
-    row = df_with_ids.agg(F.max(EVENT_ID).alias("m")).first()
-    return (row["m"] + 1) if row["m"] is not None else start
+    ranked = [_rank_with_offsets(t, per_frame[i]) for i, t in enumerate(taggeds)]
+    return ranked, acc
 
 
 def mutation_event(

@@ -40,6 +40,8 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType, LongType
 
 DEFAULT_SEED = 42
+# Training-sliver rows per centroid or PQ code (sizing in train_ann).
+TRAIN_POINTS_PER_CENTROID = 256
 
 
 def dot(a: str, b: str) -> Column:
@@ -254,7 +256,6 @@ def train_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_rows: int | None = None,
-    train_points_per_centroid: int = 256,
 ) -> tuple[dict, dict]:
     """Train every requested coarse k-means and PQ codebook set from ONE
     collect: ``coarse`` holds (n_centroids, iters, train_fraction) keys,
@@ -263,7 +264,7 @@ def train_ann(
 
     Sizing: quality needs ~100-1000 points per centroid, not the
     corpus, so each trainer reads a sliver of ``n_centroids`` (or
-    ``n_codes``) x ``train_points_per_centroid`` rows (an explicit
+    ``n_codes``) x ``TRAIN_POINTS_PER_CENTROID`` rows (an explicit
     ``train_fraction`` overrides a coarse one). Slivers are nested
     thresholds of one xxhash draw: the widest is collected once and
     each trainer keeps its own rows on the driver. A coarse sliver too
@@ -287,7 +288,7 @@ def train_ann(
     bounds = {}
     for key in coarse:
         n_cent, iters, frac = key
-        target = n_cent * train_points_per_centroid
+        target = n_cent * TRAIN_POINTS_PER_CENTROID
         if frac is None:
             frac = 1.0 if n <= target else target / n
         if int(frac * n) > max(4 * target, 65536):
@@ -296,7 +297,7 @@ def train_ann(
         else:
             bounds[("coarse", key)] = _sliver_bound(frac)
     for key in pq:
-        target = key[1] * train_points_per_centroid
+        target = key[1] * TRAIN_POINTS_PER_CENTROID
         bounds[("pq", key)] = _sliver_bound(1.0 if n <= target else target / n)
     if bounds:
         widest = max(bounds.values())
@@ -308,32 +309,6 @@ def train_ann(
             else:
                 books[key] = _pq_codebooks(sub, dim, *key)
     return cents, books
-
-
-def ivf_train_centroids(
-    df: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    iters: int = 2,
-    seed: int = DEFAULT_SEED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_fraction: float | None = None,
-    train_points_per_centroid: int = 256,
-    n_rows: int | None = None,
-) -> np.ndarray:
-    """Spherical k-means centroids (n_centroids, dim), row-normalized.
-
-    Init is a deterministic pseudo-random sample (the n_centroids rows
-    with smallest xxhash64(seed, id) — no RNG state, stable across
-    partitionings); training-sliver sizing and ``n_rows`` as in
-    ``train_ann``. Only C×dim cells ever leave the training step,
-    whatever the corpus size."""
-    key = (n_centroids, iters, train_fraction)
-    return train_ann(
-        df, dim, coarse=[key], seed=seed, id_col=id_col, vec_col=vec_col,
-        n_rows=n_rows, train_points_per_centroid=train_points_per_centroid,
-    )[0][key]
 
 
 def _lloyd_driver(
@@ -710,21 +685,6 @@ def topk_recall_floors(
     )
 
 
-def topk_recall(
-    truth: DataFrame,
-    approx: DataFrame,
-    variant: str,
-    floor_per_1000: int,
-) -> DataFrame:
-    """``topk_recall_floors`` for one untagged approximate top-k."""
-    return topk_recall_floors(
-        truth, approx.withColumn("variant", F.lit(variant)),
-        {variant: floor_per_1000},
-    )
-
-
-
-
 def kmeans_assign_int(
     df: DataFrame,
     k: int = 8,
@@ -735,7 +695,7 @@ def kmeans_assign_int(
     collapse: bool | None = None,
 ) -> DataFrame:
     """Exact-integer Lloyd k-means: the oracle-checkable variant of
-    ``ivf_train_centroids`` (which is float spherical k-means, rows-only
+    ``train_ann``'s coarse k-means (float spherical k-means, rows-only
     by nature). Every quantity is int64, so an unrolled-K SQL twin is
     bit-identical — the iterative-ML class gets a hard correctness gate,
     not just a recall floor.
@@ -1051,21 +1011,6 @@ def topk_ranking_floors(
     )
 
 
-def topk_ranking_quality(
-    truth: DataFrame,
-    approx: DataFrame,
-    variant: str,
-    k: int,
-    mrr_floor_per_1000: int,
-    ndcg_floor_per_1000: int,
-) -> DataFrame:
-    """``topk_ranking_floors`` for one untagged approximate top-k."""
-    return topk_ranking_floors(
-        truth, approx.withColumn("variant", F.lit(variant)), k,
-        {variant: (mrr_floor_per_1000, ndcg_floor_per_1000)},
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the byte-coded embedding path. At 100 TB
 # the raw float corpus does not fit hot storage: PQ stores ~m bytes per
@@ -1130,31 +1075,6 @@ def _pq_codebooks(
     )
 
 
-def pq_train_codebooks(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    n_codes: int = 16,
-    iters: int = 3,
-    seed: int = DEFAULT_SEED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_points_per_centroid: int = 256,
-    n_rows: int | None = None,
-) -> np.ndarray:
-    """Per-subspace L2 codebooks over NORMALIZED vectors ->
-    (m, n_codes, dim//m). Vectors are unit-normalized before slicing so
-    ADC L2 ranking is monotone with cosine (the corpus truth metric).
-    Training sliver and ``n_rows`` as in ``train_ann``: at most
-    n_codes x train_points_per_centroid rows (~1 MB at the defaults)
-    reach the driver, whatever the corpus size."""
-    key = (m, n_codes, iters)
-    return train_ann(
-        df, dim, pq=[key], seed=seed, id_col=id_col, vec_col=vec_col,
-        n_rows=n_rows, train_points_per_centroid=train_points_per_centroid,
-    )[1][key]
-
-
 def _pq_codes(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     """(rows, m) nearest codebook entry per subspace of the normalized
     vectors; ties take the lowest code id (stable argsort)."""
@@ -1191,20 +1111,6 @@ def _pq_encode_udf(codebooks: np.ndarray):
         return pd.Series(list(_pq_codes(mat, codebooks)))
 
     return encode
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<long>) — one Arrow-batched matmul pass via
-    ``_pq_encode_udf`` (see there for the determinism contract)."""
-    encode = _pq_encode_udf(codebooks)
-    return df.select(
-        F.col(id_col).alias("vec_id_pq"), encode(_as_double(vec_col)).alias("codes")
-    )
 
 
 # ---------------------------------------------------------------------------

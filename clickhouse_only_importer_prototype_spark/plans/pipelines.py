@@ -256,7 +256,7 @@ def _write_cna_outputs(
     if with_derived:
         tables["derived"] = cna_ops.cna_derived(df, study, profile)
     for suffix, out in tables.items():
-        write_parquet(out, f"{base}_{suffix}.parquet", single_file=True)
+        write_parquet(out, f"{base}_{suffix}.parquet")
 
 
 def _cna_single_job_scan(
@@ -536,43 +536,6 @@ def convert_cna_grouped(
     return len(inputs)
 
 
-def _write_mutation_outputs(
-    spark: SparkSession, item, parquet_dir: str, start: int
-) -> int:
-    """Per-file mutation write — the salvage replay of
-    convert_mutations_grouped_salvage: read the MAF, assign ids from
-    ``start``, write both per-study outputs (one part file each).
-    Returns the next free id (an empty MAF keeps the counter unchanged
-    — must not reset). On failure, partial outputs are removed (a stale
-    mutation_event parquet would enter the combine glob with an id
-    range another file may legitimately hold) and the error re-raised;
-    the cached frame is unpersisted on EVERY path so a failed file
-    never pins executor storage for the session."""
-    base = output_base(item.path, parquet_dir)
-    out_paths = (f"{base}_mutation_event.parquet", f"{base}_mutation.parquet")
-    try:
-        df = read_maf(spark, item.path)
-        with_ids = mut_ops.with_sequential_ids(df, start=start).persist()
-        try:
-            write_parquet(
-                mut_ops.mutation_event(with_ids), out_paths[0], single_file=True
-            )
-            write_parquet(
-                mut_ops.mutation(
-                    with_ids, item.cancer_study_id, item.genetic_profile_id
-                ),
-                out_paths[1],
-                single_file=True,
-            )
-            return mut_ops.next_event_id(with_ids, start=start)
-        finally:
-            with_ids.unpersist()
-    except Exception:
-        for p in out_paths:
-            shutil.rmtree(p, ignore_errors=True)
-        raise
-
-
 # Driver threads of the salvage probe: its per-file count jobs are
 # blocking JVM calls, so threads overlap the scheduling waits.
 _PROBE_THREADS = 8
@@ -630,7 +593,7 @@ def _balanced_union(dfs: list[DataFrame]) -> DataFrame:
 
 def _mutations_single_job_frames(
     spark: SparkSession, inputs: list, start_event_id: int
-) -> list[DataFrame]:
+) -> tuple[list[DataFrame], int]:
     """Plan the grouped mutations scan over ``inputs``: header-
     signature grouping (Spark's multi-path csv scan applies the first
     file's header to every file, so only same-header files may share a
@@ -639,9 +602,9 @@ def _mutations_single_job_frames(
     study/profile/output-base attribution joined from a broadcast
     manifest keyed by the scan's file URI. Returns one frame per header
     group carrying the MAF columns + MUTATION_EVENT_ID +
-    __file/__study/__profile/__base. A scan file missing from the
-    manifest raises mid-plan (fail loud, never silently
-    unattributed)."""
+    __file/__study/__profile/__base, and the next free id. A scan file
+    missing from the manifest raises mid-plan (fail loud, never
+    silently unattributed)."""
     from pyspark.sql import functions as F
 
     groups: dict[str, list] = {}
@@ -657,8 +620,8 @@ def _mutations_single_job_frames(
     file_order = {
         _spark_file_uri(it.path): i for i, it in enumerate(inputs)
     }
-    ranked = mut_ops.with_sequential_ids_multi(
-        frames, start=start_event_id, file_order=file_order
+    ranked, next_id = mut_ops.with_sequential_ids_multi(
+        frames, start_event_id, file_order
     )
     manifest = [
         (
@@ -674,7 +637,7 @@ def _mutations_single_job_frames(
         manifest,
         "__file string, __study string, __profile string, __base string",
     )
-    return [
+    joined = [
         r.join(F.broadcast(mf), "__file", "left").withColumn(
             "__study",
             F.when(
@@ -693,11 +656,12 @@ def _mutations_single_job_frames(
         )
         for r in ranked
     ]
+    return joined, next_id
 
 
 def _write_mutations_grouped(
     spark: SparkSession, parquet_dir: str, inputs: list, start_event_id: int
-) -> None:
+) -> int:
     """Grouped write of the probe-healthy ``inputs`` in the reference's
     per-study layout (``<studyDir>_<stem>_mutation[_event].parquet``).
 
@@ -709,10 +673,13 @@ def _write_mutations_grouped(
     written: one scan + one shuffle + one write stage per table,
     independent of study count. Inputs whose MAF has zero data rows
     get schema-only outputs, so the output SET covers every input.
-    All-or-nothing: any failure raises and promotes nothing."""
+    All-or-nothing: any failure raises and promotes nothing. Returns the
+    next free id (an empty MAF leaves the counter unchanged)."""
     from pyspark.sql import functions as F
 
-    joined_frames = _mutations_single_job_frames(spark, inputs, start_event_id)
+    joined_frames, next_id = _mutations_single_job_frames(
+        spark, inputs, start_event_id
+    )
     tables = (
         (
             "mutation_event",
@@ -747,6 +714,7 @@ def _write_mutations_grouped(
                 _arrow_schema_without_base(df),
             )
         _promote(moves)
+    return next_id
 
 
 def convert_mutations_grouped_salvage(
@@ -771,11 +739,11 @@ def convert_mutations_grouped_salvage(
          Duplicate output bases are checked over ALL inputs up front
          (a replayed file must never clobber a healthy output). A
          failure here aborts the run.
-      3. **Salvage replay** — each failed file retried through the
-         per-file writer (_write_mutation_outputs: read -> ids -> both
-         writes, partial outputs removed on failure). A deterministic
-         corruption fails again and stays in the manifest; a transient
-         failure recovers. A replayed success takes ids PAST the
+      3. **Salvage replay** — each failed file retried alone through
+         _write_mutations_grouped (all-or-nothing, so a failed replay
+         leaves no partial output). A deterministic corruption fails
+         again and stays in the manifest; a transient failure
+         recovers. A replayed success takes ids PAST the
          healthy range (unique, ordered, gapless within each phase) —
          splicing it back into discovery order would require rewriting
          every later file; the manifest names exactly which files took
@@ -792,18 +760,20 @@ def convert_mutations_grouped_salvage(
 
     counts = _probe_maf_counts(spark, inputs, summary.failed)
     healthy = [it for it in inputs if it.path in counts]
+    next_id = start_event_id
     if healthy:
-        _write_mutations_grouped(spark, parquet_dir, healthy, start_event_id)
+        next_id = _write_mutations_grouped(
+            spark, parquet_dir, healthy, start_event_id
+        )
         summary.processed = [it.path for it in healthy]
 
     # salvage replay of the manifest, fresh ids past the healthy range
-    next_id = start_event_id + sum(counts.values())
     for item in inputs:  # discovery order, deterministic replay ids
         if item.path not in summary.failed:
             continue
         try:
-            next_id = _write_mutation_outputs(
-                spark, item, parquet_dir, next_id
+            next_id = _write_mutations_grouped(
+                spark, parquet_dir, [item], next_id
             )
             del summary.failed[item.path]
             summary.processed.append(item.path)
@@ -918,7 +888,7 @@ def combine_parquet(
         logger.warning("no files matched %s", pattern)
         return 0
     df: DataFrame = spark.read.parquet(*paths)
-    write_parquet(df, output_path, single_file=True)
+    write_parquet(df, output_path)
     return len(paths)
 
 

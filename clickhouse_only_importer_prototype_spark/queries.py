@@ -286,15 +286,8 @@ def _collapse_gate(
     min_rows=100k sits between the 10x tier (20k vectors: probe never
     pays) and the 100x tier (200k: probe decides).
     """
-    try:
-        import pyarrow.parquet as pq
-
-        rows = pq.ParquetFile(
-            f"{sf_dir}/{table}.parquet"
-        ).metadata.num_rows
-    except Exception:
-        return None
-    return False if rows < min_rows else None
+    rows = _footer_rows(sf_dir, table)
+    return False if rows is not None and rows < min_rows else None
 
 
 def _ts_to_nanos(df: DataFrame) -> DataFrame:
@@ -3116,8 +3109,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plan (1 row per sampled timestamp), pure
-    generator — the prunable half of frame_sample_plan
-    (operators/multimodal.frame_plan)."""
+    generator (operators/multimodal.frame_plan)."""
     media = mm_ops.documents_as_media(load(spark, sf_dir, "documents"))
     return mm_ops.frame_plan(media, every_ms=1000)
 
@@ -3158,8 +3150,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     PPM header + raster in mapInPandas and emits integral per-channel
     pixel statistics. The oracle recomputes every statistic closed-form
     from the pixel formula — no codec in DuckDB, yet every decoded
-    value is hash-checked. The blake2b-stub path (extract_features)
-    remains for opaque formats, pinned by tests/test_multimodal.py."""
+    value is hash-checked."""
     media = media_fixture(spark, sf_dir, "ppm")
     return mm_ops.ppm_feature_stats(media)
 
@@ -3201,8 +3192,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits the ENTIRE resized image as uppercase hex; the oracle
     reconstructs the identical 59 bytes (header + 48 raster bytes)
     closed-form — a byte-identical cross-engine check of the whole
-    decode->resample->encode path. The blake2b-stub resize
-    (resize_images) remains for opaque formats."""
+    decode->resample->encode path."""
     media = media_fixture(spark, sf_dir, "ppm")
     out = mm_ops.resize_ppm(media, out_w=4, out_h=4)
     return out.select(
@@ -4687,15 +4677,8 @@ def _stream_twin(
     # fixture footer, ~300k rows per state partition, clamped to
     # [8, cores]. Semantics are partition-count-invariant (the oracle
     # equality is the proof). Restored for the batch rollup.
-    try:
-        import pyarrow.parquet as _pq
-
-        _rows = _pq.ParquetFile(
-            os.path.join(sf_dir, f"{table}.parquet")
-        ).metadata.num_rows
-    except Exception:
-        _rows = 0
-    stream_parts = max(8, min(os.cpu_count() or 8, _rows // 300_000))
+    rows = _footer_rows(sf_dir, table) or 0
+    stream_parts = max(8, min(os.cpu_count() or 8, rows // 300_000))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(stream_parts))
     try:
@@ -9674,9 +9657,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shard_assignment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planned training-shard layout audit (sinks/shards
     .shard_assignment, n=16): per-shard doc counts of the md5-stable
-    doc→shard map, proving balance before paying the write shuffle.
-    The same hash drives write_training_shards, so this oracle row is
-    the correctness evidence for the shard sink's assignment."""
+    doc→shard map, proving balance before paying the write shuffle."""
     from clickhouse_only_importer_prototype_spark.sinks.shards import (
         shard_assignment,
     )

@@ -3,9 +3,8 @@
 The reference streams Arrow batches into a Snappy parquet file, schema
 from the first batch. Spark's writer is the same thing distributed:
 ``df.write.parquet`` with snappy (session default), schema from the
-plan, one file per task. ``single_file=True`` coalesces to one output
-file to mirror the reference's one-file-per-(study × table) layout for
-parity tests — at scale leave it False so every task writes its split.
+plan. The importer writes one file per (study × table), the
+reference's layout, so the plan is coalesced to one task first.
 """
 
 from __future__ import annotations
@@ -13,44 +12,5 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    single_file: bool = False,
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.coalesce(1).write if single_file else df.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode(mode).parquet(path)
-
-
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Globally range-sorted parquet export: rows range-partitioned on
-    ``sort_cols`` (sampled boundaries), sorted within each partition,
-    one file per partition — so file-level min/max zone maps on the
-    sort key are NON-OVERLAPPING and a point/range predicate prunes to
-    O(1) files (the layout operators/layout.skipping_audit measures;
-    this sink is how a pipeline actually BUYS those numbers).
-
-    repartitionByRange SAMPLES boundaries, so file SIZES (not
-    contents' order) vary slightly run-to-run; the global ordering
-    guarantee itself is exact. At 100 TB this is the standard
-    one-shuffle sorted-table materialization: no global sort on one
-    node — each range partition sorts independently.
-    """
-    if not sort_cols:
-        raise ValueError("sort_cols must be non-empty")
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.coalesce(1).write.mode("overwrite").parquet(path)

@@ -1,4 +1,4 @@
-"""Training-shard writer: deterministic, size-balanced parquet shards.
+"""Training-shard assignment: a deterministic, balanced doc→shard map.
 
 Trainers consume corpora as N equal shards with a stable doc→shard
 assignment (so a resumed/retried write never moves a document, and a
@@ -10,64 +10,11 @@ the previous stage's partition count.
 Assignment here is the house md5 idiom (same determinism contract as
 operators/sampling.hash_split): shard = md5-hash(salt:id) mod n_shards
 — uniform by construction, stable across runs, engines, and retries.
-The write repartitions BY the shard column, so each shard's rows land
-in exactly one task and ``partitionBy`` emits one directory per shard
-(`shard=k/`), one file each.
-
-``sort_by`` orders rows within each shard (sortWithinPartitions — no
-global sort): length-sorting documents within a shard is the standard
-trick to cut padding waste in sequence packing / bucketed batching.
-
-At 100 TB: this is one hash-partition shuffle of the corpus — the
-minimum possible for a balanced N-way layout; per-shard file splitting
-is delegated to ``maxRecordsPerFile`` so tasks never buffer a shard in
-memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 64,
-    id_col: str = "doc_id",
-    salt: str = "shard-v1",
-    sort_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as ``n_shards`` hash-assigned parquet shards under
-    ``path`` (hive layout ``shard=<k>/``)."""
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1: {n_shards}")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(salt), F.lit(":"), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    sharded = df.withColumn("shard", F.pmod(h, F.lit(n_shards)).cast("int"))
-    out = sharded.repartition(n_shards, "shard")
-    if sort_by:
-        # lead with the partition column: the hive writer requires rows
-        # clustered by partition cols and re-sorts (unstably) if they
-        # are not — a ("shard", *sort_by) ordering satisfies that
-        # requirement, so the writer keeps the secondary sort intact
-        out = out.sortWithinPartitions("shard", *sort_by)
-    writer = out.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy("shard").parquet(path)
 
 
 def shard_assignment(
@@ -77,7 +24,7 @@ def shard_assignment(
     salt: str = "shard-v1",
 ) -> DataFrame:
     """The assignment alone (id → shard), for auditing a planned layout
-    without writing it — same hash as write_training_shards."""
+    without writing it."""
     h = F.conv(
         F.substring(
             F.md5(

@@ -13,8 +13,7 @@ timestamp column once, at scan.
 
 Scale: windowed aggregation state is partitioned by (window, keys);
 watermark bounds state size — without it a 100 TB stream accretes
-state forever. ``availableNow`` triggers let the same query run as an
-incremental backfill over historical parquet.
+state forever.
 """
 
 from __future__ import annotations
@@ -132,8 +131,7 @@ def sliding_type_counts(
     overlapping-window twin of tumbling_counts (each event lands in
     window/slide windows; state per open window is bounded by the
     watermark horizon). Exact counts only, so a batch/DuckDB oracle
-    can reproduce every row — the approximate-distinct variant lives
-    in sliding_user_activity."""
+    can reproduce every row."""
     src = df.withWatermark("event_time", watermark) if df.isStreaming else df
     return (
         src.groupBy(F.window("event_time", window, slide), "event_type")
@@ -141,28 +139,6 @@ def sliding_type_counts(
         .select(
             F.col("window.start").alias("window_start"),
             "event_type",
-            "n_events",
-        )
-    )
-
-
-def sliding_user_activity(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window distinct-ish user activity (count + value stats)."""
-    src = df.withWatermark("event_time", watermark) if df.isStreaming else df
-    return (
-        src.groupBy(F.window("event_time", window, slide))
-        .agg(
-            F.approx_count_distinct("user_id").alias("approx_users"),
-            F.count("*").cast("long").alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "approx_users",
             "n_events",
         )
     )
@@ -244,29 +220,6 @@ def sessionize_stateful(events: DataFrame, gap_ns: int = 1_800_000_000_000) -> D
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf="NoTimeout",
-    )
-
-
-def run_batch_backfill(
-    spark: SparkSession, path: str, out_path: str, window: str = "1 hour"
-) -> None:
-    """availableNow backfill: process all historical files incrementally
-    then stop — the streaming query as a bounded job.
-
-    Append-mode semantics: windows not yet closed by the final
-    watermark (the trailing ~window+watermark span of event time) stay
-    in checkpoint state and are emitted only when later data advances
-    the watermark — by design for an incremental backfill that will be
-    resumed; run the batch twin (queries.events_hourly) if you need
-    every window of a closed dataset."""
-    stream = read_events_stream(spark, path)
-    agg = tumbling_counts(stream, window)
-    (
-        agg.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_path}/_checkpoint")
-        .start(out_path)
-        .awaitTermination()
     )
 
 

@@ -168,11 +168,10 @@ def test_shared_sliver_matches_per_trainer_training(spark):
     )
     assert np.array_equal(
         cents[(2, 2, None)],
-        sim.ivf_train_centroids(corpus, 8, n_centroids=2, iters=2),
+        sim.train_ann(corpus, 8, coarse=[(2, 2, None)])[0][(2, 2, None)],
     )
     assert np.array_equal(
-        books[(2, 8, 3)],
-        sim.pq_train_codebooks(corpus, 8, m=2, n_codes=8, iters=3),
+        books[(2, 8, 3)], sim.train_ann(corpus, 8, pq=[(2, 8, 3)])[1][(2, 8, 3)]
     )
 
 

@@ -7,52 +7,6 @@ import pytest
 from clickhouse_only_importer_prototype_spark.operators import multimodal as mm
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    return mm.synthetic_media(spark, n=9)
-
-
-def test_feature_extraction_schema_and_dim(spark, media):
-    out = mm.extract_features(media)
-    assert [f.name for f in out.schema.fields] == [
-        "media_id", "media_type", "n_bytes", "features",
-    ]
-    rows = out.collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert len(r.features) == mm.FEATURE_DIM
-        assert r.n_bytes >= 64
-
-
-def test_feature_extraction_deterministic(spark, media):
-    a = {r.media_id: r.features for r in mm.extract_features(media).collect()}
-    b = {r.media_id: r.features for r in mm.extract_features(media).collect()}
-    assert a == b
-
-
-def test_real_decode_raises(spark, media):
-    with pytest.raises(Exception) as exc_info:
-        mm.extract_features(media, decode_stub=False).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
-def test_frame_sampling_plan(spark, media):
-    frames = mm.frame_sample_plan(media, every_ms=1000).collect()
-    # videos have duration 3000ms -> frames at 0,1000,2000 (+2999 tail guard)
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_ms)
-    assert by_media  # at least one video in fixture
-    for frame_list in by_media.values():
-        assert 0 in frame_list
-        assert all(f < 3000 for f in frame_list)
-        assert len(set(frame_list)) == len(frame_list)
-    for r in frames:
-        assert len(r.features) == mm.FEATURE_DIM
-
-
 def test_documents_as_media_metadata(spark, sf_dir):
     import hashlib
 
@@ -92,38 +46,6 @@ def test_frame_plan_counts(spark, sf_dir):
     for mid, dur in durations.items():
         expected = max((max(dur, 1) - 1) // 1000 + 1, 1)
         assert got[mid] == expected, mid
-
-
-def test_resize_images_plumbing(spark):
-    from clickhouse_only_importer_prototype_spark.operators.multimodal import (
-        _fake_resize,
-        resize_images,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n=9)
-    out = {r.media_id: r for r in resize_images(media, 32, 48).collect()}
-    images = {r.media_id: r for r in media.where("media_type = 'image'").collect()}
-    # only image rows pass (JVM-side pruning), all of them
-    assert set(out) == set(images)
-    for mid, r in out.items():
-        assert (r.out_width, r.out_height) == (32, 48)
-        assert r.n_bytes_in == len(images[mid].payload)
-        assert r.n_bytes_out == len(r.resized) == max(32 * 48 // 256, 16)
-        # deterministic across runs/partitions
-        assert bytes(r.resized) == _fake_resize(bytes(images[mid].payload), 32, 48)
-
-
-def test_resize_images_stub_gate(spark):
-    import pytest
-
-    from clickhouse_only_importer_prototype_spark.operators.multimodal import (
-        resize_images,
-        synthetic_media,
-    )
-
-    with pytest.raises(Exception, match="Pillow"):
-        resize_images(synthetic_media(spark, 3), decode_stub=False).collect()
 
 
 # ---- real PPM codec (dependency-free decode/resize, round-5) ----
@@ -170,12 +92,21 @@ def test_ppm_feature_stats_opaque_modes(spark):
     import pytest
 
     from clickhouse_only_importer_prototype_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
         ppm_feature_stats,
         resize_ppm,
-        synthetic_media,
     )
 
-    media = synthetic_media(spark, 6)  # patterned bytes, not PPM
+    rows = []
+    for i in range(6):  # patterned bytes, not PPM
+        mtype = ["image", "audio", "video"][i % 3]
+        mime = {"image": "image/png", "audio": "audio/wav",
+                "video": "video/mp4"}[mtype]
+        payload = bytes((i * 37 + j) % 256 for j in range(64 + i))
+        side = 64 if mtype == "image" else None
+        dur = 3000 if mtype == "video" else None
+        rows.append((i, mtype, mime, payload, side, side, dur))
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     with pytest.raises(Exception, match="codec"):
         ppm_feature_stats(media).collect()
     assert ppm_feature_stats(media, on_opaque="skip").count() == 0

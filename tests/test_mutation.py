@@ -15,6 +15,16 @@ from clickhouse_only_importer_prototype_spark.schemas import (
 from clickhouse_only_importer_prototype_spark.sources.tsv import read_maf
 
 
+def _with_ids(df, path, start=0):
+    """One scanned MAF through with_sequential_ids_multi: (frame with
+    MUTATION_EVENT_ID, next free id)."""
+    file_order = {pipelines._spark_file_uri(str(path)): 0}
+    (ranked,), next_id = mut_ops.with_sequential_ids_multi(
+        [df], start, file_order
+    )
+    return ranked, next_id
+
+
 def test_maf_comment_skip(spark, study_tree):
     df = read_maf(spark, os.path.join(study_tree, "study_a", "data_mutations.txt"))
     assert df.count() == 3
@@ -37,8 +47,8 @@ def test_event_ids_dense_across_files(spark, study_tree, tmp_path):
 
 
 def test_event_id_row_order_within_file(spark, study_tree):
-    df = read_maf(spark, os.path.join(study_tree, "study_a", "data_mutations.txt"))
-    with_ids = mut_ops.with_sequential_ids(df)
+    path = os.path.join(study_tree, "study_a", "data_mutations.txt")
+    with_ids, _ = _with_ids(read_maf(spark, path), path)
     rows = {r.Start_Position: r.MUTATION_EVENT_ID for r in with_ids.collect()}
     # file order: TP53(7577121), EGFR(55249071), KRAS(25398284)
     assert rows["7577121"] == 0
@@ -62,7 +72,7 @@ def test_sequential_ids_parallel_within_one_file(spark, tmp_path):
     try:
         df = read_maf(spark, str(path))
         assert df.rdd.getNumPartitions() > 1  # the file really splits
-        with_ids = mut_ops.with_sequential_ids(df, start=10)
+        with_ids, _ = _with_ids(df, path, start=10)
         got = [
             int(r.Start_Position)
             for r in with_ids.orderBy("MUTATION_EVENT_ID").collect()
@@ -78,10 +88,8 @@ def test_sequential_ids_parallel_within_one_file(spark, tmp_path):
 
 
 def test_missing_columns_become_empty_string(spark, study_tree):
-    df = read_maf(
-        spark, os.path.join(study_tree, "study_b", "data_mutations_extended.txt")
-    )
-    with_ids = mut_ops.with_sequential_ids(df)
+    path = os.path.join(study_tree, "study_b", "data_mutations_extended.txt")
+    with_ids, _ = _with_ids(read_maf(spark, path), path)
     mut = mut_ops.mutation(with_ids, "study_b", "study_b_mutations")
     row = mut.orderBy("MUTATION_EVENT_ID").collect()[0]
     assert row.SCORE == ""  # column absent from MAF
@@ -97,8 +105,8 @@ def test_missing_columns_become_empty_string(spark, study_tree):
 
 
 def test_output_schemas_exact(spark, study_tree):
-    df = read_maf(spark, os.path.join(study_tree, "study_a", "data_mutations.txt"))
-    with_ids = mut_ops.with_sequential_ids(df)
+    path = os.path.join(study_tree, "study_a", "data_mutations.txt")
+    with_ids, _ = _with_ids(read_maf(spark, path), path)
     ev = mut_ops.mutation_event(with_ids)
     mut = mut_ops.mutation(with_ids, "s", "p")
     assert ev.columns == [f.name for f in MUTATION_EVENT_SCHEMA.fields]
@@ -110,19 +118,20 @@ def test_output_schemas_exact(spark, study_tree):
 
 def test_row_count_invariants(spark, study_tree):
     # mutation rows == mutation_event rows == MAF data rows (no dedup)
-    df = read_maf(spark, os.path.join(study_tree, "study_a", "data_mutations.txt"))
-    with_ids = mut_ops.with_sequential_ids(df)
+    path = os.path.join(study_tree, "study_a", "data_mutations.txt")
+    df = read_maf(spark, path)
+    with_ids, _ = _with_ids(df, path)
     n = df.count()
     assert mut_ops.mutation_event(with_ids).count() == n
     assert mut_ops.mutation(with_ids, "s", "p").count() == n
 
 
 def test_start_event_id_threading(spark, study_tree):
-    df = read_maf(spark, os.path.join(study_tree, "study_a", "data_mutations.txt"))
-    with_ids = mut_ops.with_sequential_ids(df, start=100)
+    path = os.path.join(study_tree, "study_a", "data_mutations.txt")
+    with_ids, next_id = _with_ids(read_maf(spark, path), path, start=100)
     ids = sorted(r.MUTATION_EVENT_ID for r in with_ids.collect())
     assert ids == [100, 101, 102]
-    assert mut_ops.next_event_id(with_ids) == 103
+    assert next_id == 103
 
 
 def test_combine_mutations(spark, study_tree, tmp_path):
@@ -136,14 +145,14 @@ def test_combine_mutations(spark, study_tree, tmp_path):
     assert ids == [0, 1, 2, 3, 4]
 
 
-def test_next_event_id_preserves_start_on_empty(spark):
-    from clickhouse_only_importer_prototype_spark.operators.mutation import (
-        EVENT_ID,
-        next_event_id,
-    )
-
-    empty = spark.createDataFrame([], f"{EVENT_ID} long, x string")
-    assert next_event_id(empty, start=137) == 137
+def test_next_event_id_preserves_start_on_empty(spark, tmp_path):
+    """An empty MAF leaves the next id at ``start`` — returning 0 would
+    reset the cross-file counter and duplicate ids for every later
+    file."""
+    path = tmp_path / "data_mutations_empty.txt"
+    path.write_text("Hugo_Symbol\tTumor_Sample_Barcode\n")
+    _, next_id = _with_ids(read_maf(spark, str(path)), path, start=137)
+    assert next_id == 137
 
 
 def test_sequential_ids_guard_trips_on_partition_drift(spark, tmp_path):
@@ -160,13 +169,13 @@ def test_sequential_ids_guard_trips_on_partition_drift(spark, tmp_path):
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024))
     try:
         df = read_maf(spark, str(path))
-        with_ids = mut_ops.with_sequential_ids(df)  # counts pass: ~18 splits
+        with_ids, _ = _with_ids(df, path)  # counts pass: ~18 splits
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024))
         with pytest.raises(Exception, match="packing drifted"):
             with_ids.collect()  # rank pass: ~70 splits -> unseen pids
         # drift the other way: rank pass merges splits -> count mismatch
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024))
-        with_ids2 = mut_ops.with_sequential_ids(read_maf(spark, str(path)))
+        with_ids2, _ = _with_ids(read_maf(spark, str(path)), path)
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(1024 * 1024 * 128))
         with pytest.raises(Exception, match="packing drifted"):
             with_ids2.collect()

@@ -169,12 +169,14 @@ TREES = {
 
 
 def _fail_reads_of(needle, real_read):
-    """read_maf seam that fails every single-path read of a file whose
-    path contains ``needle`` (PERMISSIVE csv makes content-level read
-    failures unreachable, so the isolation logic is pinned here)."""
+    """read_maf seam that fails every read — single path or path list —
+    that includes a file whose path contains ``needle`` (PERMISSIVE csv
+    makes content-level read failures unreachable, so the isolation
+    logic is pinned here)."""
 
     def read(spark_, path):
-        if isinstance(path, str) and needle in path:
+        paths = [path] if isinstance(path, str) else path
+        if any(needle in p for p in paths):
             raise RuntimeError(f"injected read failure: {needle}")
         return real_read(spark_, path)
 

@@ -156,11 +156,9 @@ def test_ivf_train_fraction_validation(spark, embeddings):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="train_fraction"):
-        similarity.ivf_train_centroids(embeddings, dim=64, train_fraction=0.0)
+        similarity.train_ann(embeddings, 64, coarse=[(16, 2, 0.0)])
     with _pytest.raises(ValueError, match="training vectors"):
-        similarity.ivf_train_centroids(
-            embeddings.limit(4), dim=64, n_centroids=16
-        )
+        similarity.train_ann(embeddings.limit(4), 64, coarse=[(16, 2, None)])
 
 
 def test_quantize_embeddings_preserves_cosine(spark, embeddings):
@@ -197,16 +195,18 @@ def test_quantize_embeddings_preserves_cosine(spark, embeddings):
 def test_topk_recall_floor_semantics(spark, embeddings):
     from clickhouse_only_importer_prototype_spark.operators.similarity import (
         cosine_topk_bruteforce,
-        topk_recall,
+        topk_recall_floors,
     )
 
     q = embeddings.where(F.col("vec_id") < 5)
     truth = cosine_topk_bruteforce(embeddings, q, k=3)
     # perfect recall against itself; impossible floor flips the bit
-    row = topk_recall(truth, truth, "self", 1000).first()
+    self_tagged = truth.withColumn("variant", F.lit("self"))
+    row = topk_recall_floors(truth, self_tagged, {"self": 1000}).first()
     assert row.variant == "self" and row.meets_floor
     assert row.truth_pairs == truth.count()
-    assert not topk_recall(truth, truth.limit(0), "none", 1).first().meets_floor
+    none = truth.limit(0).withColumn("variant", F.lit("none"))
+    assert not topk_recall_floors(truth, none, {"none": 1}).first().meets_floor
 
 
 def test_kmeans_int_separable_clusters(spark):
@@ -307,16 +307,16 @@ def test_grouped_neardup_matches_bruteforce(spark):
 def test_topk_ranking_quality_exact_self_is_perfect(spark):
     # approx == truth -> MRR = 1.0 and NDCG = 1.0; floors at 1000 pass
     from clickhouse_only_importer_prototype_spark.operators.similarity import (
-        topk_ranking_quality,
+        topk_ranking_floors,
     )
 
     truth = spark.createDataFrame(
         [(0, 10, 1), (0, 11, 2), (1, 12, 1), (1, 13, 2)],
         "query_id long, neighbor_id long, rank long",
     )
-    row = topk_ranking_quality(
-        truth, truth, "self", k=2, mrr_floor_per_1000=1000,
-        ndcg_floor_per_1000=1000,
+    row = topk_ranking_floors(
+        truth, truth.withColumn("variant", F.lit("self")), 2,
+        {"self": (1000, 1000)},
     ).collect()[0]
     assert row.n_queries == 2
     assert row.meets_mrr_floor and row.meets_ndcg_floor
@@ -324,7 +324,7 @@ def test_topk_ranking_quality_exact_self_is_perfect(spark):
 
 def test_topk_ranking_quality_reversed_list_fails_ndcg_only(spark):
     from clickhouse_only_importer_prototype_spark.operators.similarity import (
-        topk_ranking_quality,
+        topk_ranking_floors,
     )
 
     truth = spark.createDataFrame(
@@ -338,9 +338,9 @@ def test_topk_ranking_quality_reversed_list_fails_ndcg_only(spark):
         [(0, 99, 1), (0, 12, 2), (0, 11, 3)],
         "query_id long, neighbor_id long, rank long",
     )
-    row = topk_ranking_quality(
-        truth, approx, "adv", k=3, mrr_floor_per_1000=600,
-        ndcg_floor_per_1000=900,
+    row = topk_ranking_floors(
+        truth, approx.withColumn("variant", F.lit("adv")), 3,
+        {"adv": (600, 900)},
     ).collect()[0]
     # first hit at rank 2 -> MRR = 0.5 < 0.6; dcg = w2+w3 < 0.9*idcg
     assert not row.meets_mrr_floor
@@ -349,7 +349,7 @@ def test_topk_ranking_quality_reversed_list_fails_ndcg_only(spark):
 
 def test_topk_ranking_quality_zero_hit_query_counts_as_zero(spark):
     from clickhouse_only_importer_prototype_spark.operators.similarity import (
-        topk_ranking_quality,
+        topk_ranking_floors,
     )
 
     truth = spark.createDataFrame(
@@ -362,13 +362,13 @@ def test_topk_ranking_quality_zero_hit_query_counts_as_zero(spark):
     )
     # q0 perfect, q1 nothing -> mean MRR = 0.5 exactly; floor 500 passes,
     # floor 501 fails (integer div, no drift)
-    ok = topk_ranking_quality(
-        truth, approx, "half", k=1, mrr_floor_per_1000=500,
-        ndcg_floor_per_1000=500,
+    ok = topk_ranking_floors(
+        truth, approx.withColumn("variant", F.lit("half")), 1,
+        {"half": (500, 500)},
     ).collect()[0]
-    bad = topk_ranking_quality(
-        truth, approx, "half", k=1, mrr_floor_per_1000=501,
-        ndcg_floor_per_1000=501,
+    bad = topk_ranking_floors(
+        truth, approx.withColumn("variant", F.lit("half")), 1,
+        {"half": (501, 501)},
     ).collect()[0]
     assert ok.meets_mrr_floor and ok.meets_ndcg_floor
     assert not bad.meets_mrr_floor and not bad.meets_ndcg_floor
@@ -500,11 +500,13 @@ def test_pq_topk_recall_and_determinism(spark, sf_dir):
     assert sorted(map(tuple, pq.collect())) == sorted(
         map(tuple, again.collect())
     )
-    cb = sim.pq_train_codebooks(emb, dim=64, m=8, n_codes=32)
+    key = (8, 32, 3)  # train_ann pq key: m, n_codes, iters
+    cb = sim.train_ann(emb, 64, pq=[key])[1][key]
     assert cb.shape == (8, 32, 8)
-    codes = sim.pq_encode(emb, cb).collect()
+    mat = np.array([r.embedding for r in emb.collect()], dtype=np.float64)
+    codes = sim._pq_codes(mat, cb)
     assert all(
-        len(r.codes) == 8 and all(0 <= c < 32 for c in r.codes)
+        len(r) == 8 and all(0 <= c < 32 for c in r)
         for r in codes
     )
 
@@ -566,7 +568,7 @@ def test_ivfpq_recall_floor_and_determinism(spark, sf_dir):
         map(tuple, again.collect())
     )
     # inverted-list prune honored: neighbor cell in query's probe set
-    cents = sim.ivf_train_centroids(emb, dim=64, n_centroids=16, iters=2)
+    cents = sim.train_ann(emb, 64, coarse=[(16, 2, None)])[0][(16, 2, None)]
     assign = sim._ivf_probe_udf(cents, 1)
     probe = sim._ivf_probe_udf(cents, 4)
     cells = {

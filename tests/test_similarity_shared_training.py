@@ -22,13 +22,13 @@ def embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+_IVF = (16, 2, None)  # train_ann coarse key: n_centroids, iters, fraction
+_PQ = (8, 16, 2)  # train_ann pq key: m, n_codes, iters
+
+
 def test_retraining_is_bit_identical(embeddings):
-    a = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2
-    )
-    b = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2
-    )
+    a = similarity.train_ann(embeddings, 64, coarse=[_IVF])[0][_IVF]
+    b = similarity.train_ann(embeddings, 64, coarse=[_IVF])[0][_IVF]
     assert a.shape == (16, 64)
     assert np.array_equal(a, b)  # bit-exact, not allclose
 
@@ -69,19 +69,11 @@ def test_n_rows_hint_is_bit_identical(embeddings):
     """The footer row-count hint must be a pure job-elision: same
     sliver, same centroids/codebooks, bit-for-bit."""
     n = embeddings.count()
-    a = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2
-    )
-    b = similarity.ivf_train_centroids(
-        embeddings, dim=64, n_centroids=16, iters=2, n_rows=n
-    )
+    a = similarity.train_ann(embeddings, 64, coarse=[_IVF])[0][_IVF]
+    b = similarity.train_ann(embeddings, 64, coarse=[_IVF], n_rows=n)[0][_IVF]
     assert np.array_equal(a, b)
-    ca = similarity.pq_train_codebooks(
-        embeddings, dim=64, m=8, n_codes=16, iters=2
-    )
-    cb = similarity.pq_train_codebooks(
-        embeddings, dim=64, m=8, n_codes=16, iters=2, n_rows=n
-    )
+    ca = similarity.train_ann(embeddings, 64, pq=[_PQ])[1][_PQ]
+    cb = similarity.train_ann(embeddings, 64, pq=[_PQ], n_rows=n)[1][_PQ]
     assert np.array_equal(ca, cb)
 
 
@@ -97,7 +89,7 @@ def test_prebuilt_variant_ignores_session_training(embeddings, tmp_path):
         embeddings.where("vec_id % 2 = 0"), path, "ivf", dim=64
     )
     idx = ann_index.load_ann_index(path)
-    session = similarity.ivf_train_centroids(embeddings, dim=64)
+    session = similarity.train_ann(embeddings, 64, coarse=[_IVF])[0][_IVF]
     assert not np.array_equal(idx.centroids, session)
     both = similarity.ann_topk(
         embeddings, q, 64,

@@ -1,15 +1,11 @@
 """Sinks: JDBC (S9) option plumbing + write path executed for real
-against Spark's bundled embedded Derby (no ClickHouse in container),
-and bucketed tables joining shuffle-free."""
+against Spark's bundled embedded Derby (no ClickHouse in container)."""
 
 from __future__ import annotations
 
 import pytest
 
-from clickhouse_only_importer_prototype_spark.sinks import (
-    bucketed,
-    clickhouse as ch,
-)
+from clickhouse_only_importer_prototype_spark.sinks import clickhouse as ch
 
 
 def test_jdbc_writer_options():
@@ -69,13 +65,9 @@ def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir, tmp_path):
     the table."""
     from pyspark.sql import functions as F
 
-    from clickhouse_only_importer_prototype_spark.sinks.parquet import (
-        write_parquet,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = str(tmp_path / "docs_by_lang")
-    write_parquet(docs, out, partition_by=["lang"])
+    docs.write.partitionBy("lang").mode("overwrite").parquet(out)
     back = spark.read.parquet(out).where(F.col("lang") == "en")
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -83,79 +75,6 @@ def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir, tmp_path):
     # values survive the layout round-trip
     expect = docs.where(F.col("lang") == "en").count()
     assert back.count() == expect and expect > 0
-
-
-def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key sort-merge join with NO
-    shuffle on either side — the write-time shuffle is the whole point
-    of bucketing at 100 TB. Broadcast is disabled for the check so the
-    planner can't sidestep the question."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_name"
-    )
-    bucketed.write_bucketed(
-        orders, "b_orders", 8, ["o_custkey"], path=str(tmp_path / "b_orders")
-    )
-    bucketed.write_bucketed(
-        cust.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_customer",
-        8,
-        ["o_custkey"],
-        path=str(tmp_path / "b_customer"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed.read_bucketed(spark, "b_orders").join(
-            bucketed.read_bucketed(spark, "b_customer"), "o_custkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # and it still computes the right thing
-        plain = orders.join(
-            cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-        )
-        assert joined.count() == plain.count()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
-def test_bucketed_equality_predicate_prunes_buckets(spark, sf_dir, tmp_path):
-    """An equality filter on the bucket key scans 1 of n buckets.
-    autoBucketedScan must be off for a scan-only plan: Spark's auto
-    mode disables the bucketed scan when no operator exploits the
-    distribution, which also forfeits pruning."""
-    import io
-    import contextlib
-    import re
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    bucketed.write_bucketed(
-        orders, "bp_orders", 8, ["o_custkey"], path=str(tmp_path / "bp")
-    )
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        df = spark.table("bp_orders").where("o_custkey = 371")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", buf.getvalue())
-        assert m and (m.group(1), m.group(2)) == ("1", "8")
-        plain = orders.where("o_custkey = 371").count()
-        assert df.count() == plain
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-        )
-        spark.sql("DROP TABLE IF EXISTS bp_orders")
 
 
 def test_clickhouse_type_mapping():
@@ -292,137 +211,6 @@ def test_cli_checksum_mode(spark, tmp_path, capsys):
     assert "n_rows=3" in out_a and "checksum=" in out_a
     # empty dir: loud failure, not a silent empty report
     assert main(["-mode", "checksum", "-parquet-dir", str(tmp_path / "nope")]) == 1
-
-
-def test_training_shards_layout_and_stability(spark, sf_dir, tmp_path):
-    """Shard sink: hive shard dirs, stable assignment, within-shard
-    sort, and agreement with shard_assignment."""
-    import glob
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.sinks.shards import (
-        shard_assignment,
-        write_training_shards,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "n_chars"
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(
-        docs, out, n_shards=8, sort_by=["n_chars", "doc_id"]
-    )
-    dirs = sorted(glob.glob(f"{out}/shard=*"))
-    assert len(dirs) == 8
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-
-    # every row is in its md5 shard, matching the python reference
-    def ref_shard(i):
-        return (
-            int(hashlib.md5(f"shard-v1:{i}".encode()).hexdigest()[:15], 16)
-            % 8
-        )
-
-    sample = back.select("doc_id", "shard").limit(200).collect()
-    assert all(r.shard == ref_shard(r.doc_id) for r in sample)
-
-    # audit op agrees with the written layout
-    audit = {
-        r.shard: r["count"]
-        for r in shard_assignment(docs, n_shards=8)
-        .groupBy("shard")
-        .count()
-        .collect()
-    }
-    written = {
-        r.shard: r["count"]
-        for r in back.groupBy("shard").count().collect()
-    }
-    assert audit == written
-    # balance: no shard more than 2x the mean (md5-uniform)
-    mean = docs.count() / 8
-    assert all(c < 2 * mean for c in written.values())
-
-    # within-shard sort: each parquet file is n_chars-ordered
-    one = spark.read.parquet(dirs[0]).select("n_chars").collect()
-    vals = [r.n_chars for r in one]
-    assert vals == sorted(vals)
-
-    # determinism: a second write lands every doc in the same shard
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(docs, out2, n_shards=8)
-    back2 = spark.read.parquet(out2)
-    assert (
-        back.select("doc_id", "shard")
-        .exceptAll(back2.select("doc_id", "shard"))
-        .count()
-        == 0
-    )
-
-
-def test_training_shards_max_records_per_file(spark, tmp_path):
-    import glob
-
-    from clickhouse_only_importer_prototype_spark.sinks.shards import (
-        write_training_shards,
-    )
-
-    df = spark.range(1000).withColumnRenamed("id", "doc_id")
-    out = str(tmp_path / "small")
-    write_training_shards(
-        df, out, n_shards=2, max_records_per_file=100
-    )
-    files = glob.glob(f"{out}/shard=*/*.parquet")
-    # ~1000 rows / 2 shards / 100-rows-per-file => >= 10 files
-    assert len(files) >= 10
-    with pytest.raises(ValueError):
-        write_training_shards(df, out, n_shards=0)
-
-
-def test_range_sorted_export_nonoverlapping_zone_maps(spark, sf_dir, tmp_path):
-    """write_range_sorted: per-file min/max ranges on the sort key are
-    disjoint and ordered — the property that makes zone-map skipping
-    prune to O(1) files."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from clickhouse_only_importer_prototype_spark.sinks.parquet import (
-        write_range_sorted,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    out = str(tmp_path / "sorted")
-    write_range_sorted(orders, out, ["o_totalprice"], n_files=8)
-
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) >= 2
-    ranges = []
-    for f in files:
-        r = (
-            spark.read.parquet(f)
-            .agg(
-                F.min("o_totalprice").alias("lo"),
-                F.max("o_totalprice").alias("hi"),
-                F.count("*").alias("n"),
-            )
-            .first()
-        )
-        if r["n"]:
-            ranges.append((r["lo"], r["hi"]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint, ordered zone maps
-    # nothing lost
-    back = spark.read.parquet(out)
-    assert back.count() == orders.count()
-    with pytest.raises(ValueError):
-        write_range_sorted(orders, out, [])
 
 
 def _capture_server():
